@@ -8,6 +8,9 @@ an indexed table — the reference's signature workload batched into one job).
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,6 +39,17 @@ SF001 = "/root/testdata/sf0.001"
 # helpers
 
 _cache: dict[tuple[str, str], object] = {}
+_tmp_root: list[str] = []
+
+
+def _mkdtemp(prefix: str) -> str:
+    """tempfile.mkdtemp under ONE per-process root that is removed at
+    interpreter exit, so the stores, stream sources and checkpoints the
+    queries stage never outlive the process."""
+    if not _tmp_root:
+        _tmp_root.append(tempfile.mkdtemp(prefix="iodf_run_"))
+        atexit.register(shutil.rmtree, _tmp_root[0], ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_tmp_root[0])
 
 
 def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -476,7 +490,6 @@ SSTREAM_MOD = 4  # sstream arm's corpus subset: doc_id % SSTREAM_MOD = 0
 def _sstream_spans(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Drive the incremental ExactSubstr stream for the 'sstream' arm (see
     _dedup_exact_arms) and return its accumulated spans."""
-    import tempfile
 
     from iodf_spark.streaming.ingest import (
         read_duplicated_spans,
@@ -484,8 +497,8 @@ def _sstream_spans(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
 
     sub = docs.filter(F.col("doc_id") % SSTREAM_MOD == 0).select("doc_id", "text")
-    src = tempfile.mkdtemp(prefix="iodf_ss_src_")
-    state = tempfile.mkdtemp(prefix="iodf_ss_state_")
+    src = _mkdtemp(prefix="iodf_ss_src_")
+    state = _mkdtemp(prefix="iodf_ss_state_")
     # 2-file source + maxFilesPerTrigger=1 -> 2 micro-batches: cross-batch
     # duplicates take the retroactive-emission path
     sub.repartition(2).write.mode("overwrite").parquet(src)
@@ -705,15 +718,13 @@ def _dedup_minhash_arms(spark: SparkSession, sf_dir: str):
         return df.select(F.lit(name).alias("variant"), "*")
 
     def stream_arm() -> DataFrame:
-        import tempfile
-
         from iodf_spark.streaming.ingest import (
             read_neardup_pairs,
             stream_neardup_pairs,
         )
 
-        src = tempfile.mkdtemp(prefix="iodf_nd_src_")
-        state = tempfile.mkdtemp(prefix="iodf_nd_state_")
+        src = _mkdtemp(prefix="iodf_nd_src_")
+        state = _mkdtemp(prefix="iodf_nd_state_")
         # 4-file source + maxFilesPerTrigger=1 -> 4 micro-batches in
         # arbitrary hash order: exercises the order-independence of
         # exactly-once pair discovery
@@ -836,11 +847,9 @@ def _ivfpq_store_path(spark: SparkSession, emb: DataFrame, memo: dict) -> str:
     kept: plain store shared here, the residual build lives only in the
     one arm that attests residual scoring.)"""
     if "ivfpq_path" not in memo:
-        import tempfile
-
         from iodf_spark.operators.similarity import ivfpq_build_store
 
-        path = tempfile.mkdtemp(prefix="iodf_ivfpq_store_")
+        path = _mkdtemp(prefix="iodf_ivfpq_store_")
         ivfpq_build_store(emb, "vec_id", "embedding", path, n_centroids=4, dim=EMB_DIM)
         memo["ivfpq_path"] = path
     return memo["ivfpq_path"]
@@ -869,11 +878,10 @@ def _ivfpq_res_arm(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFram
     first-stage-retriever shape whose candidates never touch the float
     corpus, and the pure-ADC ordering is exactly what the recall-floor
     pytests gate)."""
-    import tempfile
 
     from iodf_spark.operators.similarity import ann_ivfpq_store, ivfpq_build_store
 
-    path = tempfile.mkdtemp(prefix="iodf_ivfpq_res_")
+    path = _mkdtemp(prefix="iodf_ivfpq_res_")
     ivfpq_build_store(
         emb, "vec_id", "embedding", path, n_centroids=4, dim=EMB_DIM, residual=True
     )
@@ -1040,7 +1048,6 @@ def _ann_lifecycle_stage(spark: SparkSession, emb_fn, memo: dict, stage: int) ->
     (ann_maintenance) — takedowns must stop surfacing from probes at
     every lifecycle stage. Stages (monotonic; arms run in order and each
     arm advances as far as it needs, so a standalone run self-bootstraps):
-
     1. corpus delete_where -> ann_store_sync: the tombstoned row_ids are
        resolved to vector ids (touched segments only) and pushed onto the
        store's deletion list — probes anti-join it, NO cell rewrite;
@@ -1063,13 +1070,11 @@ def _ann_lifecycle_stage(spark: SparkSession, emb_fn, memo: dict, stage: int) ->
     from iodf_spark.sources.segments import SegmentStore
 
     if "life" not in memo:
-        import tempfile
-
-        corpus = SegmentStore(tempfile.mkdtemp(prefix="iodf_ann_corpus_"))
+        corpus = SegmentStore(_mkdtemp(prefix="iodf_ann_corpus_"))
         # no order_keys: the parquet source is already vec_id-ordered and
         # the fixture needs no sorted-invariant — skip the sort
         corpus.write_segment(emb_fn())
-        path = tempfile.mkdtemp(prefix="iodf_ann_life_")
+        path = _mkdtemp(prefix="iodf_ann_life_")
         ann_store_seed(spark, corpus, path, "vec_id", "embedding", dim=EMB_DIM)
         memo["life"] = {"corpus": corpus, "path": path, "stage": 0}
     st = memo["life"]
@@ -1360,7 +1365,6 @@ def _sdecon_spans(
     sstream arm there is NO state store — contamination is per-doc
     against a static benchmark, so the op is a stateless stream-static
     broadcast semi join and stream == batch under any split."""
-    import tempfile
 
     from iodf_spark.streaming.ingest import (
         read_contaminated_spans,
@@ -1368,8 +1372,8 @@ def _sdecon_spans(
     )
 
     sub = train.filter(F.col("doc_id") % SSTREAM_MOD == 0).select("doc_id", "text")
-    src = tempfile.mkdtemp(prefix="iodf_sd_src_")
-    state = tempfile.mkdtemp(prefix="iodf_sd_state_")
+    src = _mkdtemp(prefix="iodf_sd_src_")
+    state = _mkdtemp(prefix="iodf_sd_state_")
     # 2-file source + maxFilesPerTrigger=1 -> hits land across 2 batches
     sub.repartition(2).write.mode("overwrite").parquet(src)
     stream = (
@@ -1924,7 +1928,6 @@ JOIN_Q5_LO, JOIN_Q5_HI = "1996-01-01", "1999-01-01"
 def q_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.6 joins, three classic OLAP shapes in one attested entry
     (unified schema variant/k/n/measure):
-
     * 'star' — fact-to-dim star join with broadcast dims (customer and
       nation are small: broadcast hash join, no shuffle of orders).
     * 'q3' — TPC-H Q3 shape: 3-way join with per-side filters pushed to
@@ -2399,8 +2402,6 @@ def _orders_store(spark: SparkSession, sf_dir: str, compact: bool = False):
     o_orderstatus, each indexed on o_orderpriority; the 'O' segment carries
     an extra column to exercise MultiDf default-fill. The compact variant
     rewrites the 3 segments into 1 (writeMergedDf)."""
-    import shutil
-    import tempfile
 
     from iodf_spark.sources.segments import SegmentStore
 
@@ -2413,7 +2414,7 @@ def _orders_store(spark: SparkSession, sf_dir: str, compact: bool = False):
             # exactly a second store; skips re-running 3 stamp+write+index
             # rounds that the base build already paid for
             base = _orders_store(spark, sf_dir, compact=False)
-            path = tempfile.mkdtemp(prefix="iodf_segs_c_")
+            path = _mkdtemp(prefix="iodf_segs_c_")
             shutil.rmtree(path)
             shutil.copytree(base.path, path)
             store = SegmentStore(path)
@@ -2422,7 +2423,7 @@ def _orders_store(spark: SparkSession, sf_dir: str, compact: bool = False):
             # result stays indexed — the writeMergedIndexedDf path
             store.compact(spark, defaults={"flag": 0})
         else:
-            store = SegmentStore(tempfile.mkdtemp(prefix="iodf_segs_"))
+            store = SegmentStore(_mkdtemp(prefix="iodf_segs_"))
             od = load_table(spark, sf_dir, "orders").withColumn("flag", F.lit(1))
             # one-pass partitioned ingest: 3 segments from ONE stamped scan;
             # only the 'O' segment keeps the extra column (exercises the
@@ -2463,7 +2464,6 @@ def _segments_compact_arms(spark: SparkSession, sf_dir: str):
     single consolidated timing cell hid one-arm regressions from the 2x
     gate — while q_segments_compact unions the same thunks for the
     correctness oracle. Shared lifecycle state lives in ``st``."""
-    import tempfile
 
     from iodf_spark.sources.segments import SegmentStore
 
@@ -2485,7 +2485,7 @@ def _segments_compact_arms(spark: SparkSession, sf_dir: str):
     def arm_have() -> DataFrame:
         # S7 haveIndexedDf (Dfs.scala:546-554): create-if-absent — the
         # first call builds and writes, the second is a no-op
-        hstore = SegmentStore(tempfile.mkdtemp(prefix="iodf_have_"))
+        hstore = SegmentStore(_mkdtemp(prefix="iodf_have_"))
         first = hstore.have_segments(
             lambda: load_table(spark, sf_dir, "region"), order_keys=["r_regionkey"]
         )
@@ -2543,7 +2543,7 @@ def _segments_compact_arms(spark: SparkSession, sf_dir: str):
         # size-tiered compaction (the LSM policy): 4 same-tier region
         # segments merge into ONE adjacent-run rewrite; content + global
         # row_ids survive (oracle re-derives over 4 concatenated copies)
-        tstore = SegmentStore(tempfile.mkdtemp(prefix="iodf_tiered_"))
+        tstore = SegmentStore(_mkdtemp(prefix="iodf_tiered_"))
         for _ in range(4):
             tstore.write_segment(
                 load_table(spark, sf_dir, "region"),
@@ -2583,7 +2583,7 @@ def _segments_compact_arms(spark: SparkSession, sf_dir: str):
         # purge contract). FIXED rebase bounds make the renumbering
         # engine-reproducible: the oracle re-derives every new row_id
         # from the same dual-dialect Morton formula.
-        zstore = SegmentStore(tempfile.mkdtemp(prefix="iodf_zorder_"))
+        zstore = SegmentStore(_mkdtemp(prefix="iodf_zorder_"))
         # deterministic 1/8 subset: the arm attests the rewrite contract,
         # not bulk throughput (the full-corpus cost class is purge's, and
         # the sf-ladder covers scaling) — both engines filter identically
@@ -2626,10 +2626,9 @@ def _segments_compact_arms(spark: SparkSession, sf_dir: str):
         # Lucene liveDocs): tombstone every o_orderpriority='1-URGENT' row
         # via ONE id-list write, no segment rewrite — open() hides them
         # while survivors keep their ORIGINAL global row_ids
-        import shutil
 
         base3 = _orders_store(spark, sf_dir, compact=False)
-        dpath = tempfile.mkdtemp(prefix="iodf_segs_d_")
+        dpath = _mkdtemp(prefix="iodf_segs_d_")
         shutil.rmtree(dpath)
         shutil.copytree(base3.path, dpath)
         dstore = SegmentStore(dpath)
@@ -2710,7 +2709,7 @@ def _segments_compact_arms(spark: SparkSession, sf_dir: str):
         from iodf_spark.streaming.ingest import mirror_changes
 
         dstore = st["dstore"]
-        mdst = SegmentStore(tempfile.mkdtemp(prefix="iodf_mirror_"))
+        mdst = SegmentStore(_mkdtemp(prefix="iodf_mirror_"))
         windows = mirror_changes(
             spark, dstore, mdst, dstore.path + "/_mirror_ck",
             defaults={"flag": 0}, seed_at_version=st["pre_delete_v"],
@@ -2799,10 +2798,9 @@ def _segments_compact_arms(spark: SparkSession, sf_dir: str):
         # % 20 = 13 orders under negated keys (inserts); survivors keep
         # their original row_ids, so the checksum pins both the id
         # stability and the updated values (merged rows weigh 3x).
-        import shutil
 
         base3 = _orders_store(spark, sf_dir, compact=False)
-        mpath = tempfile.mkdtemp(prefix="iodf_segs_m_")
+        mpath = _mkdtemp(prefix="iodf_segs_m_")
         shutil.rmtree(mpath)
         shutil.copytree(base3.path, mpath)
         mstore = SegmentStore(mpath)
@@ -2905,7 +2903,6 @@ def q_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_id — the output's n_name comes FROM the re-opened seq, so the seq
     path is value-attested by the same oracle."""
     import dataclasses
-    import tempfile
 
     from iodf_spark.sources.tables import open_seq, write_seq
     from iodf_spark.sources.typed import collect_typed, create_typed_df
@@ -2928,7 +2925,7 @@ def q_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tdf = create_typed_df(spark, items)
     if collect_typed(tdf, NationItem) != items:  # apply(i) round-trip invariant
         raise AssertionError("typed round-trip mismatch")
-    path = tempfile.mkdtemp(prefix="iodf_seq_") + "/n_name"
+    path = _mkdtemp(prefix="iodf_seq_") + "/n_name"
     write_seq(tdf, "n_name", path)
     seq = open_seq(spark, path)  # (row_id, n_name)
     return tdf.drop("n_name").join(seq, "row_id").select(
@@ -3200,12 +3197,10 @@ def _text_search_arms(spark: SparkSession, sf_dir: str):
         # timing, honestly)
         key = ("chunkivf_store", sf_dir)
         if key not in _cache:
-            import tempfile
-
             from iodf_spark.operators.similarity import ivf_build_store
 
             emb = chunk_emb()
-            path = tempfile.mkdtemp(prefix="iodf_chunkivf_")
+            path = _mkdtemp(prefix="iodf_chunkivf_")
             ivf_build_store(
                 emb, "cid", "vec", path,
                 n_centroids=CHUNKIVF_CELLS, dim=SEMVEC_DIM,
@@ -3270,7 +3265,6 @@ def _text_search_arms(spark: SparkSession, sf_dir: str):
         # DuckDB IVF oracle as chunkivf's one-shot build — the 100 TB
         # claim (daily cost = day's documents, not the corpus), verified
         # by value.
-        import tempfile
 
         from iodf_spark.operators.ann_maintenance import (
             chunk_store_seed,
@@ -3282,12 +3276,12 @@ def _text_search_arms(spark: SparkSession, sf_dir: str):
         key = ("chunksync_store", sf_dir)
         if key not in _cache:
             d = docs().select("doc_id", "text")
-            croot = tempfile.mkdtemp(prefix="iodf_chunksync_corpus_")
+            croot = _mkdtemp(prefix="iodf_chunksync_corpus_")
             store = SegmentStore(croot + "/docs")
             store.write_segment(
                 d.filter(F.col("doc_id") % 2 == 0), order_keys=["doc_id"]
             )
-            spath = tempfile.mkdtemp(prefix="iodf_chunksync_store_")
+            spath = _mkdtemp(prefix="iodf_chunksync_store_")
             geo = dict(
                 dim=SEMVEC_DIM, n_centroids=CHUNKIVF_CELLS,
                 chunk_toks=CHUNK_TOKS, overlap=CHUNK_OVERLAP,
@@ -3418,12 +3412,11 @@ def q_stream_ingest_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     immutable segments via foreachBatch (the reference's
     append-a-segment-per-write, Dfs.scala:181-220, driven by a stream);
     result checks row count and row_id contiguity of the opened store."""
-    import tempfile
 
     from iodf_spark.sources.segments import SegmentStore
     from iodf_spark.streaming.ingest import stream_events, stream_ingest_segments
 
-    store = SegmentStore(tempfile.mkdtemp(prefix="iodf_stream_segs_"))
+    store = SegmentStore(_mkdtemp(prefix="iodf_stream_segs_"))
     stream_ingest_segments(stream_events(spark, sf_dir), store, order_keys=["event_id"])
     df = store.open(spark)
     return df.agg(

@@ -24,7 +24,9 @@ driver oracle attests both against the same SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from iodf_spark.operators.index import DEFAULT_BUCKET_SIZE
@@ -35,6 +37,25 @@ from iodf_spark.operators.index import probe
 # constant is workload-tunable; what matters is that the decision is made
 # from index statistics, not guessed per query.
 DEFAULT_THRESHOLD = 0.1
+
+
+def _scan_pred(p: tuple) -> Column:
+    """The scan-path Column for one predicate tuple — the single builder
+    both the in-memory and the segment-store planners filter with.
+    ``(col, value)`` is equality; ``(col, lo, hi)`` is an inclusive range
+    with None for an unbounded side, and ``(col, None, None)`` matches
+    every non-null value (as its index-path range probe does)."""
+    if len(p) == 2:
+        return F.col(p[0]) == F.lit(p[1])
+    c, lo, hi = F.col(p[0]), p[1], p[2]
+    if lo is None:
+        return c.isNotNull() if hi is None else c <= F.lit(hi)
+    return c >= F.lit(lo) if hi is None else (c >= F.lit(lo)) & (c <= F.lit(hi))
+
+
+def _scan_any(preds: list[tuple]) -> Column:
+    """OR of :func:`_scan_pred` over ``preds`` (the disjunctive scan)."""
+    return reduce(lambda a, b: a | b, [_scan_pred(p) for p in preds])
 
 
 def plan_stats(index_df: DataFrame, preds: list[tuple]) -> dict:
@@ -91,7 +112,7 @@ def smart_filter(
             index_df, col, value, n, bucket_size, encoding_hint="auto"
         ).to_rows()
         return data.join(ids, "row_id", "left_semi"), path
-    return data.filter(F.col(col) == F.lit(value)), path
+    return data.filter(_scan_pred((col, value))), path
 
 
 def smart_filter_all(
@@ -137,14 +158,7 @@ def smart_filter_all(
         ]
         out = out.join(intersect_all(sets).to_rows(), "row_id", "left_semi")
     for p in routed["scan"]:
-        if len(p) == 2:
-            out = out.filter(F.col(p[0]) == F.lit(p[1]))
-        else:
-            col, lo, hi = p
-            if lo is not None:
-                out = out.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                out = out.filter(F.col(col) <= F.lit(hi))
+        out = out.filter(_scan_pred(p))
     return out, routed
 
 
@@ -189,19 +203,4 @@ def smart_filter_any(
             for p in preds
         ]
         return data.join(union_all(sets).to_rows(), "row_id", "left_semi"), "index"
-    cond = None
-    for p in preds:
-        if len(p) == 2:
-            term = F.col(p[0]) == F.lit(p[1])
-        else:
-            col, lo, hi = p
-            term = None
-            if lo is not None:
-                term = F.col(col) >= F.lit(lo)
-            if hi is not None:
-                t2 = F.col(col) <= F.lit(hi)
-                term = t2 if term is None else (term & t2)
-            if term is None:  # (col, None, None) matches every non-null value
-                term = F.col(col).isNotNull()
-        cond = term if cond is None else (cond | term)
-    return data.filter(cond), "scan"
+    return data.filter(_scan_any(preds)), "scan"

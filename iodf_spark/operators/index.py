@@ -280,10 +280,17 @@ def build_index(
     return sparse_part.unionByName(dense_part, allowMissingColumns=False)
 
 
-def write_index(index_df: DataFrame, path: str) -> None:
+def write_index(
+    index_df: DataFrame,
+    path: str,
+    compression: str | None = None,
+    group_keys: list[str] | None = None,
+) -> None:
     """Persist partitioned by col_name (partition pruning for probes),
     globally ordered by (col_name, typed key, bucket) — the Spark analog
-    of the reference's sorted colIds invariant (Dfs.scala:250).
+    of the reference's sorted colIds invariant (Dfs.scala:250). This is
+    the ONE index layout: standalone indexes, every segment-store segment
+    and merged (compacted) indexes are all written here.
 
     A global orderBy, not repartition("col_name")+sortWithinPartitions:
     hash-clustering by column funnels EVERY posting of a column into ONE
@@ -292,17 +299,27 @@ def write_index(index_df: DataFrame, path: str) -> None:
     size the shuffle to the data. The result is stronger, not weaker:
     each column's postings land as a run of key-disjoint sorted files, so
     value probes still skip by Parquet min/max and the partition dirs
-    still prune by column."""
-    (
+    still prune by column. The sort is on the TYPED key, so numeric keys
+    are in numeric order (2 < 10), not in the lexical order of value_str.
+
+    ``compression`` is the Parquet codec (None = the session default).
+    ``group_keys`` writes the many indexes of a grouped
+    :func:`build_index` in one job: the group columns lead both the sort
+    and the partition dirs (``<path>/<key>=<v>/col_name=<c>/``), so each
+    group's subtree has exactly the layout of a single-index write."""
+    gks = list(group_keys or [])
+    writer = (
         index_df.orderBy(
+            *gks,
             "col_name",
             "value_kind", "value_bool", "value_long", "value_double", "value_str",
             "bucket",
         )
         .write.mode("overwrite")
-        .partitionBy("col_name")
-        .parquet(path)
     )
+    if compression is not None:
+        writer = writer.option("compression", compression)
+    writer.partitionBy(*gks, "col_name").parquet(path)
 
 
 def read_index(spark: SparkSession, path: str) -> DataFrame:

@@ -43,6 +43,17 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     return df
 
 
+def _default_driver_mem() -> str:
+    """60% of physical RAM, capped at 32g: a fixed 32g heap on a 16 GB
+    host lets the JVM grow until the kernel kills it. ``SPARK_DRIVER_MEM``
+    overrides."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):  # no sysconf (non-POSIX)
+        return "32g"
+    return f"{max(512, min(32 << 10, int(ram * 0.6) >> 20))}m"
+
+
 def get_spark(app_name: str = "iodf_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -56,7 +67,7 @@ def get_spark(app_name: str = "iodf_spark", shuffle_partitions: int | None = Non
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the unrolled 64-term vector kernels (operators/similarity.py)

@@ -19,6 +19,14 @@ Spark-first rendition:
   the multi-segment index view shifts each segment's posting lists by its
   row offset (MultiBits 'shard' alignment, utils/MultiBits.scala:11-23,
   comes for free: buckets are recomputed from global ids)
+* ONE writer: every producer (write_segment, write_segments_by,
+  merge_by_key, compact_run, purge, optimize_zorder) lays out its
+  segments through ``SegmentStore._write_segments`` — data, footer zone
+  map, index, sketch and bloom entry fields — and every index, built or
+  merged, goes through ``index.write_index`` (the reference's
+  writeIndexedDf / writeMergedIndexedDf share one layout too,
+  Dfs.scala:476-510). purge is optimize_zorder's renumbering rewrite
+  with one segment ordered by the old row_id.
 
 Scale notes: the manifest is tiny driver-side metadata (one entry per
 segment). Opening N segments is one multi-path Parquet scan — Spark reads
@@ -38,12 +46,13 @@ import os
 import time
 import uuid
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iodf_spark.operators.index import IndexConf, build_index
+from iodf_spark.operators import access
+from iodf_spark.operators.index import IndexConf, build_index, write_index
 from iodf_spark.sources import fsio
 from iodf_spark.plans.rowset import DEFAULT_BUCKET_SIZE
 from iodf_spark.sources.tables import with_row_id, with_row_id_scalable
@@ -211,6 +220,18 @@ def _entry_overlaps(entry: dict, predicates: list[tuple]) -> bool:
     return True
 
 
+def _pred_allows(entry: dict, p: tuple) -> bool:
+    """May ``entry`` hold rows matching predicate tuple ``p``? Zone maps
+    test ranges ``(col, lo, hi)`` and equalities ``(col, value)``; an
+    equality is also tested against the entry's Bloom bitset."""
+    if len(p) == 3:
+        return _entry_overlaps(entry, [p])
+    b = (entry.get("blooms") or {}).get(p[0])
+    return _entry_overlaps(entry, [(p[0], p[1], p[1])]) and (
+        b is None or _bloom_may_contain(b, p[1])
+    )
+
+
 def _parquet_dir_rows(path: str) -> int:
     """Exact row count of a Parquet directory from file FOOTERS alone —
     driver-side metadata reads, zero Spark jobs (the count twin of
@@ -354,6 +375,16 @@ def _bloom_build(df: DataFrame, col: str, m: int, k: int) -> tuple[str, float]:
     return base64.b64encode(bytes(buf)).decode("ascii"), set_bits / m
 
 
+def _bloomable(df: DataFrame, cols: list[str]) -> list[str]:
+    """The columns of ``cols`` a bloom can be built on in ``df``: a
+    column widened out of the string/integer family across segments
+    cannot be re-bloomed (see _bloom_build)."""
+    return [
+        c for c in cols
+        if df.schema[c].dataType.simpleString() in ("string", *_BLOOM_INT_KINDS)
+    ]
+
+
 def _bloom_test(blob: str, m: int, k: int, value) -> bool:
     """May the segment contain value? False negatives are impossible;
     false-positive rate ~ (1 - e^(-k*n_distinct/m))^k."""
@@ -384,6 +415,10 @@ def _bloom_fill(blob: str, m: int) -> float:
     import base64
 
     return sum(b.bit_count() for b in base64.b64decode(blob)) / m
+
+
+def _seg_name(seg_id: int) -> str:
+    return f"seg-{seg_id:05d}"
 
 
 def _cmp_lt(a, b) -> bool:
@@ -705,20 +740,11 @@ class SegmentStore:
             for e in to_doc["segments"]
             if e["row_id_offset"] + e["n_rows"] > from_total
         ]
-        if not new_entries and to_doc["segments"]:
-            # empty window: keep the full data schema (consumers union
-            # deltas across windows) by planning one segment filtered out
-            new_entries = to_doc["segments"][:1]
-            ins_filter = F.lit(False)
-        else:
-            ins_filter = F.col("row_id") >= from_total
+        # an empty window keeps the full data schema (consumers union
+        # deltas across windows): _live plans one segment filtered out
         ins = (
-            self._apply_tombstones(
-                spark,
-                self._open_entries(spark, new_entries, defaults),
-                to_doc["tombstones"],
-            )
-            .filter(ins_filter)
+            self._live(spark, to_doc, new_entries, defaults)
+            .filter(F.col("row_id") >= from_total)
             .withColumn("_change_type", F.lit("insert"))
         )
         new_tombs = [t for t in to_doc["tombstones"] if t["file"] not in from_files]
@@ -756,7 +782,7 @@ class SegmentStore:
         for doc in [self.manifest_doc()] + [
             self.manifest_doc_at(v) for v in self.versions()
         ]:
-            live |= {f"seg-{e['segment_id']:05d}" for e in doc["segments"]}
+            live |= {_seg_name(e["segment_id"]) for e in doc["segments"]}
             live |= {t["file"] for t in doc["tombstones"]}
         now = time.time()
 
@@ -784,11 +810,12 @@ class SegmentStore:
             ):
                 fsio.remove_tree(full)
                 removed.append(name)
-            elif name.startswith("_zorder_tmp_") and aged(full):
-                # optimize_zorder's one-pass staging dir: cleaned on every
-                # exit path, so a survivor means a crash mid-rewrite —
-                # never referenced by any manifest, safe to sweep after
-                # the same grace window
+            elif name.startswith(("_stage_tmp_", "_zorder_tmp_")) and aged(full):
+                # a batched index write's staging dir (older versions
+                # staged optimize_zorder data as _zorder_tmp_): removed on
+                # success, so a survivor means a crash mid-write — never
+                # referenced by any manifest, safe to sweep after the same
+                # grace window
                 fsio.remove_tree(full)
                 removed.append(name)
             elif ".manifest.tmp" in name and aged(full):
@@ -849,15 +876,13 @@ class SegmentStore:
         for v in all_vs:
             if v not in keep:
                 doc = self.manifest_doc_at(v)
-                dropped_refs |= {
-                    f"seg-{e['segment_id']:05d}" for e in doc["segments"]
-                }
+                dropped_refs |= {_seg_name(e["segment_id"]) for e in doc["segments"]}
                 dropped_refs |= {t["file"] for t in doc["tombstones"]}
                 fsio.remove_file(os.path.join(self.path, f"manifest-v{v:06d}.json"))
         live = set()
         for v in sorted(keep):
             doc = self.manifest_doc_at(v)
-            live |= {f"seg-{e['segment_id']:05d}" for e in doc["segments"]}
+            live |= {_seg_name(e["segment_id"]) for e in doc["segments"]}
             live |= {t["file"] for t in doc["tombstones"]}
         removed = []
         for name in sorted(dropped_refs - live):
@@ -886,126 +911,220 @@ class SegmentStore:
             claim_id += 1
         return claim_id
 
-    def _write_segment_files(
+    def _new_seg_ids(self, entries: list[dict], m: int = 1) -> list[int]:
+        """Claim ``m`` fresh segment dirs past the highest id in
+        ``entries`` (each claim starts after the previous one)."""
+        ids: list[int] = []
+        nxt = max((e["segment_id"] for e in entries), default=-1) + 1
+        for _ in range(m):
+            ids.append(self._claim_seg_id(nxt))
+            nxt = ids[-1] + 1
+        return ids
+
+    def _seg_path(self, seg_id: int, *parts: str) -> str:
+        return os.path.join(self.path, _seg_name(seg_id), *parts)
+
+    @staticmethod
+    def _carry_batch_keys(entry: dict, absorbed: list[dict]) -> None:
+        """Carry the idempotency keys of every absorbed segment onto
+        ``entry``: a replayed producer (crash after publish, before its
+        checkpoint advanced) that races a compaction or a renumbering
+        rewrite must still see its batch_key as committed, or it silently
+        re-appends the micro-batch."""
+        keys: set[str] = set()
+        for e in absorbed:
+            if e.get("batch_key") is not None:
+                keys.add(e["batch_key"])
+            keys.update(e.get("batch_keys", ()))
+        if keys:
+            entry["batch_keys"] = sorted(keys)
+
+    def _write_segments(
         self,
         df: DataFrame,
-        seg_id: int,
-        index_conf: IndexConf | None,
+        seg_ids: list[int],
+        sizes: list[int] | None = None,
+        index_conf: IndexConf | None = None,
+        index_df: DataFrame | None = None,
+        indexed_cols: list[str] | None = None,
         order_keys: list[str] | None = None,
-        n_rows: int | None = None,
+        reshape: "Callable[[int, DataFrame], DataFrame] | None" = None,
         sketch_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
         bloom_m: int | None = None,
         bloom_k: int | None = None,
-    ) -> dict:
-        """Write one segment's data (and index) under seg-<id>/ WITHOUT
-        touching the manifest. Job-count discipline (constant-factor fix):
-        the row-id stamping job already yields the exact row count, and the
-        index is built from the same in-memory (checkpointed) plan — so a
-        plain write is 2 jobs (stamp + write) and an indexed write is 3,
-        instead of re-reading the written Parquet once for a count and once
-        more for the index build."""
+        sketches: dict | None = None,
+        blooms: dict | None = None,
+    ) -> list[dict]:
+        """THE segment writer: every producer (append, batched append,
+        merge, compaction and the renumbering rewrites) lays out its
+        segments here, under the claimed ``seg_ids`` dirs, WITHOUT touching
+        the manifest (writeIndexedDf, Dfs.scala:489-510). Returns one entry
+        per segment (no ``row_id_offset`` — the caller's commit sets it).
+
+        ``df`` carries row ids 0..n-1 (it is stamped here if it has none:
+        ``order_keys`` order, else arrival order). With several
+        ``seg_ids``, segment k holds the ids of ``sizes[k]`` after those of
+        segments 0..k-1, rebased to 0; callers pass a checkpointed ``df``
+        then, since every segment's data write reads it. ``sizes`` of
+        None means one segment of unknown size, counted from the written
+        footers. ``reshape(k, seg_df)`` adapts segment k's data before its
+        write (segments need not share a schema).
+
+        Per segment: one data write (TIMESTAMP_MICROS), the footer zone
+        map, the index (built with ``index_conf`` — one grouped build and
+        write for all segments — or the caller's ready ``index_df``
+        covering ``indexed_cols``), then HLL sketches of ``sketch_cols``
+        and Bloom bitsets of ``bloom_cols`` from the written files.
+        ``sketches``/``blooms`` are precomputed fields (a compaction's
+        unions) that the computed ones extend."""
+        spark = df.sparkSession
         if "row_id" not in df.columns:
-            df, n_rows = (
+            df, n = (
                 with_row_id(df, order_keys, return_count=True)
                 if order_keys
                 else with_row_id_scalable(df, return_count=True)
             )
-        seg_path = os.path.join(self.path, f"seg-{seg_id:05d}")
+            sizes = [n]
+        sizes = list(sizes or [None])
+        multi = len(seg_ids) > 1
+        starts = [sum(sizes[:k]) for k in range(len(sizes))] if multi else [0]
+
+        def part(k: int) -> DataFrame:
+            if not multi:
+                return df
+            lo, hi = starts[k], starts[k] + sizes[k]
+            return df.filter(
+                (F.col("row_id") >= lo) & (F.col("row_id") < hi)
+            ).withColumn("row_id", F.col("row_id") - F.lit(lo).cast("long"))
+
         # pin timestamps to TIMESTAMP_MICROS for the data write: Spark's
         # legacy INT96 default carries NO parquet min/max statistics, which
         # would silently disable time-range zone maps — the single most
         # valuable pruning column of an event store (µs is also the
         # Iceberg/Delta interchange encoding). Set-and-restore so the
         # store behaves identically under any caller session.
-        spark = df.sparkSession
         prev_tst = spark.conf.get("spark.sql.parquet.outputTimestampType")
         spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         try:
-            df.write.mode("overwrite").option(
-                "compression", self.compression
-            ).parquet(os.path.join(seg_path, "data"))
+            for k, sid in enumerate(seg_ids):
+                seg = part(k) if reshape is None else reshape(k, part(k))
+                seg.write.mode("overwrite").option(
+                    "compression", self.compression
+                ).parquet(self._seg_path(sid, "data"))
         finally:
             spark.conf.set("spark.sql.parquet.outputTimestampType", prev_tst)
-        stats = _footer_stats(os.path.join(seg_path, "data"))
-        if n_rows is None:
-            # caller supplied a pre-stamped df with unknown count: Parquet
-            # metadata-only count on the files just written (no data scan)
-            n_rows = df.sparkSession.read.parquet(os.path.join(seg_path, "data")).count()
+        if sizes[0] is None:
+            # pre-stamped input of unknown size: count the footers just
+            # written (driver-side metadata, no Spark job)
+            sizes = [_parquet_dir_rows(self._seg_path(seg_ids[0], "data"))]
         if index_conf is not None:
-            ix = build_index(df, index_conf, bucket_size=self.bucket_size, n_rows=n_rows)
-            # global orderBy, not repartition("col_name"): hash-clustering
-            # funnels a column's whole posting table into one task; the
-            # required sort keeps files key-disjoint AND lets AQE size the
-            # shuffle (see operators/index.write_index)
-            (
-                ix.orderBy("col_name", "value_kind", "value_str", "bucket")
-                .write.mode("overwrite")
-                .option("compression", self.compression)
-                .partitionBy("col_name")
-                .parquet(os.path.join(seg_path, "index"))
-            )
-        entry = {
-            "segment_id": seg_id,
-            "n_rows": int(n_rows),
-            "indexed": index_conf is not None,
-            "stats": stats,
-        }
-        if index_conf is not None:
-            # which columns the stored index COVERS: the access planner
-            # must scan, not probe, a predicate on an uncovered column
-            # (its f there is 0 — "no postings", not "no rows")
-            entry["indexed_cols"] = sorted(index_conf.columns(df))
-        # metadata aggregations (sketches, blooms) read the files JUST
-        # WRITTEN, not the in-flight plan: the written scan is columnar —
-        # only the sketched/bloomed columns are read (ReadSchema pruning)
-        # — and re-planning the stamped checkpoint+join+window pipeline
-        # per aggregation measured ~2-3x the cost of the tiny-file scan
-        written = spark.read.parquet(os.path.join(seg_path, "data"))
-        if sketch_cols:
-            # per-column Datasketches HLL, base64 in the manifest (~2 KB
-            # each): store-level distinct counts become a metadata union,
-            # never a data scan. One agg job covers every sketched column.
-            import base64
+            indexed_cols = sorted(index_conf.columns(df))
+            if multi:
+                # ALL segment indexes in ONE grouped build + ONE write (vs
+                # a build+write round each): _seg threads through the
+                # aggregations with per-segment n for the density rule, and
+                # the _seg=<k> dirs are renamed into each segment's index
+                seg_no = F.lit(0)
+                for k in range(1, len(seg_ids)):
+                    seg_no = F.when(F.col("row_id") >= starts[k], k).otherwise(seg_no)
+                local = df.withColumn("_seg", seg_no).withColumn(
+                    "row_id",
+                    F.col("row_id")
+                    - F.element_at(F.array(*map(F.lit, starts)), F.col("_seg") + 1),
+                )
+                index_df = build_index(
+                    local, index_conf, bucket_size=self.bucket_size,
+                    n_rows=dict(enumerate(sizes)), group_keys=["_seg"],
+                )
+            else:
+                index_df = build_index(
+                    df, index_conf, bucket_size=self.bucket_size, n_rows=sizes[0]
+                )
+        if index_df is not None:
+            if multi:
+                tmp = os.path.join(self.path, f"_stage_tmp_{uuid.uuid4().hex[:8]}")
+                write_index(index_df, tmp, self.compression, group_keys=["_seg"])
+                for k, sid in enumerate(seg_ids):
+                    src = os.path.join(tmp, f"_seg={k}")
+                    if fsio.is_dir(src):
+                        fsio.rename_dir(src, self._seg_path(sid, "index"))
+                    else:  # empty segment: an empty (but schema'd) index
+                        index_df.filter(F.lit(False)).drop("_seg").write.mode(
+                            "overwrite"
+                        ).parquet(self._seg_path(sid, "index"))
+                fsio.remove_tree(tmp)
+            else:
+                write_index(index_df, self._seg_path(seg_ids[0], "index"), self.compression)
+        # sketches and blooms aggregate each segment's WRITTEN files, not
+        # the in-flight plan: the written scan is columnar — only the
+        # sketched/bloomed columns are read (ReadSchema pruning) — and
+        # re-planning the stamped checkpoint+join+window pipeline per
+        # aggregation measured ~2-3x the cost of the tiny-file scan
+        import base64
 
-            row = written.agg(
-                *[F.hll_sketch_agg(c).alias(c) for c in sketch_cols]
-            ).collect()[0]
-            entry["sketches"] = {
-                c: base64.b64encode(bytes(row[c])).decode("ascii")
-                for c in sketch_cols
-                if row[c] is not None
+        out = []
+        for k, sid in enumerate(seg_ids):
+            data_dir = self._seg_path(sid, "data")
+            n = int(sizes[k])
+            entry = {
+                "segment_id": sid,
+                "n_rows": n,
+                "indexed": index_df is not None,
+                "stats": _footer_stats(data_dir),
             }
-        if bloom_cols:
+            if index_df is not None:
+                # which columns the stored index COVERS: the access planner
+                # must scan, not probe, a predicate on an uncovered column
+                # (its f there is 0 — "no postings", not "no rows")
+                entry["indexed_cols"] = sorted(indexed_cols or ())
+            written = spark.read.parquet(data_dir)
+            seg_sketches, seg_blooms, dropped = dict(sketches or {}), dict(blooms or {}), []
+            if sketch_cols:
+                # per-column Datasketches HLL, base64 in the manifest (~2 KB
+                # each): store-level distinct counts become a metadata
+                # union, never a data scan. One agg job covers every
+                # sketched column.
+                row = written.agg(
+                    *[F.hll_sketch_agg(c).alias(c) for c in sketch_cols]
+                ).collect()[0]
+                seg_sketches.update(
+                    (c, base64.b64encode(bytes(row[c])).decode("ascii"))
+                    for c in sketch_cols
+                    if row[c] is not None
+                )
             # per-column Bloom membership bitsets in the manifest: POINT-
             # lookup segment skipping on unsorted high-cardinality keys —
             # the case zone maps can't prune (their min/max envelope of a
             # shuffled key spans everything). Probes are pure driver-side
             # Python. Geometry auto-sizes from the segment's row count at
             # the target fpp unless pinned by the caller; a build whose
-            # bitset exceeds 50% fill (row count past the manifest budget)
-            # is DROPPED and flagged — a saturated bloom prunes nothing
-            # but still costs manifest bytes and probe time. The stored
-            # column kind canonicalizes coercing probes (1.0 vs int col).
-            m = bloom_m if bloom_m is not None else _bloom_geometry(n_rows)[0]
-            k = bloom_k if bloom_k is not None else _bloom_geometry(n_rows)[1]
-            blooms, dropped = {}, []
-            for c in bloom_cols:
-                bits, fill = _bloom_build(written, c, m, k)
+            # bitset exceeds the fill guard (row count past the manifest
+            # budget) is DROPPED and flagged — a saturated bloom prunes
+            # nothing but still costs manifest bytes and probe time. The
+            # stored column kind canonicalizes coercing probes (1.0 vs
+            # int col).
+            m = bloom_m if bloom_m is not None else _bloom_geometry(n)[0]
+            kh = bloom_k if bloom_k is not None else _bloom_geometry(n)[1]
+            for c in bloom_cols or ():
+                bits, fill = _bloom_build(written, c, m, kh)
                 if fill > _BLOOM_MAX_FILL:
                     dropped.append(c)
                     continue
-                blooms[c] = {
+                seg_blooms[c] = {
                     "m": m,
-                    "k": k,
+                    "k": kh,
                     "bits": bits,
-                    "kind": df.schema[c].dataType.simpleString(),
+                    "kind": written.schema[c].dataType.simpleString(),
                 }
-            if blooms:
-                entry["blooms"] = blooms
+            if seg_sketches:
+                entry["sketches"] = seg_sketches
+            if seg_blooms:
+                entry["blooms"] = seg_blooms
             if dropped:
                 entry["blooms_dropped"] = sorted(dropped)
-        return entry
+            out.append(entry)
+        return out
 
     def write_segment(
         self,
@@ -1041,21 +1160,27 @@ class SegmentStore:
         their batch_keys), which is exactly Delta's append-vs-append
         conflict-resolution rule."""
         entries, base_v = self.manifest_versioned()
-        if batch_key is not None:
+
+        def committed() -> dict | None:
             # consult both the live key and keys absorbed into merged
             # segments (batch_keys) — compaction must not reopen the
             # exactly-once window (Delta retains txn appId/version actions
             # across compaction the same way)
-            for e in entries:
-                if e.get("batch_key") == batch_key or batch_key in e.get("batch_keys", ()):
-                    return e
-        seg_id = self._claim_seg_id(
-            max((e["segment_id"] for e in entries), default=-1) + 1
-        )
-        entry = self._write_segment_files(
-            df, seg_id, index_conf, order_keys=order_keys, n_rows=n_rows,
-            sketch_cols=sketch_cols, bloom_cols=bloom_cols,
-            bloom_m=bloom_m, bloom_k=bloom_k,
+            if batch_key is not None:
+                for e in entries:
+                    if e.get("batch_key") == batch_key or batch_key in e.get(
+                        "batch_keys", ()
+                    ):
+                        return e
+            return None
+
+        if (prior := committed()) is not None:
+            return prior
+        (seg_id,) = self._new_seg_ids(entries)
+        (entry,) = self._write_segments(
+            df, [seg_id], None if n_rows is None else [n_rows], index_conf,
+            order_keys=order_keys, sketch_cols=sketch_cols,
+            bloom_cols=bloom_cols, bloom_m=bloom_m, bloom_k=bloom_k,
         )
         if batch_key is not None:
             entry["batch_key"] = batch_key
@@ -1066,20 +1191,14 @@ class SegmentStore:
                 return entry
             except ManifestConflictError:
                 entries, base_v = self.manifest_versioned()
-                if batch_key is not None:
-                    for e in entries:
-                        if e.get("batch_key") == batch_key or batch_key in e.get(
-                            "batch_keys", ()
-                        ):
-                            # the racing writer WAS us (replayed producer):
-                            # drop our duplicate files, adopt its commit
-                            fsio.remove_tree(
-                                os.path.join(self.path, f"seg-{seg_id:05d}")
-                            )
-                            return e
+                if (prior := committed()) is not None:
+                    # the racing writer WAS us (replayed producer): drop
+                    # our duplicate files, adopt its commit
+                    fsio.remove_tree(self._seg_path(seg_id))
+                    return prior
         raise ManifestConflictError(
             f"append lost the manifest race {_COMMIT_RETRIES} times in "
-            f"{self.path}; giving up (segment files kept at seg-{seg_id:05d} "
+            f"{self.path}; giving up (segment files kept at {_seg_name(seg_id)} "
             "pending reconcile)"
         )
 
@@ -1107,7 +1226,9 @@ class SegmentStore:
         ``per_segment(value, seg_df) -> seg_df`` optionally reshapes each
         segment before its write (e.g. drop a column the other segments
         don't carry) — segments NEED NOT share a schema on disk; the
-        multi-segment open outer-aligns and default-fills."""
+        multi-segment open outer-aligns and default-fills. Indexed columns
+        come from the pre-reshape scan — per_segment reshaping must not
+        drop an indexed column."""
         rank_expr = F.when(F.col(split_col) == split_values[0], 0)
         for i, v in enumerate(split_values[1:], start=1):
             rank_expr = rank_expr.when(F.col(split_col) == v, i)
@@ -1125,84 +1246,29 @@ class SegmentStore:
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
         }
+        sizes = [int(counts.get(i, 0)) for i in range(len(split_values))]
+        assert sum(sizes) == total
         entries_prev, base_v = self.manifest_versioned()
-        next_id = max((e["segment_id"] for e in entries_prev), default=-1) + 1
-        base_offset = sum(e["n_rows"] for e in entries_prev)
-        new_entries, seg_ids, seg_start, seg_starts = [], [], 0, {}
-        for i, v in enumerate(split_values):
-            seg_starts[i] = seg_start
-            n_seg = int(counts.get(i, 0))
-            seg = (
-                stamped.filter(F.col("_srank") == i)
-                .withColumn("row_id", F.col("row_id") - F.lit(seg_start).cast("long"))
-                .drop("_srank")
-            )
-            if per_segment is not None:
-                seg = per_segment(v, seg)
-            sid = self._claim_seg_id(next_id)
-            next_id = sid + 1
-            seg_ids.append(sid)
-            entry = self._write_segment_files(seg, sid, None, n_rows=n_seg)
-            entry["indexed"] = index_conf is not None
-            if index_conf is not None:
-                entry["indexed_cols"] = sorted(
-                    c for c in index_conf.columns(df) if c != "_srank"
-                )
-            entry["row_id_offset"] = base_offset + seg_start
-            new_entries.append(entry)
-            seg_start += n_seg
-        assert seg_start == total
-        if index_conf is not None:
-            # ALL segment indexes in ONE build job + ONE partitioned write
-            # (vs a per-segment build+write round each): group_keys threads
-            # _srank through the aggregations with per-segment n for the
-            # density rule; the _srank=<i> output dirs are renamed into the
-            # per-segment index layout (identical on disk to N sequential
-            # writes). Indexed columns come from the pre-reshape scan —
-            # per_segment reshaping must not drop an indexed column.
-            start_case = F.when(F.col("_srank") == 0, 0)
-            for i in range(1, len(split_values)):
-                start_case = start_case.when(F.col("_srank") == i, seg_starts[i])
-            local = stamped.withColumn(
-                "row_id", F.col("row_id") - start_case.cast("long")
-            )
-            ix = build_index(
-                local,
-                index_conf,
-                bucket_size=self.bucket_size,
-                n_rows={i: int(counts.get(i, 0)) for i in range(len(split_values))},
-                group_keys=["_srank"],
-            )
-            tmp = os.path.join(self.path, "_ix_batch.tmp")
-            (
-                ix.repartition("_srank", "col_name")
-                .sortWithinPartitions("value_kind", "value_str", "bucket")
-                .write.mode("overwrite")
-                .partitionBy("_srank", "col_name")
-                .parquet(tmp)
-            )
-            for i in range(len(split_values)):
-                dst = os.path.join(
-                    self.path, f"seg-{seg_ids[i]:05d}", "index"
-                )
-                src = os.path.join(tmp, f"_srank={i}")
-                if fsio.is_dir(src):
-                    fsio.rename_dir(src, dst)
-                else:  # empty segment: write an empty (but schema'd) index
-                    ix.filter(F.lit(False)).drop("_srank").write.mode(
-                        "overwrite"
-                    ).parquet(dst)
-            fsio.remove_tree(tmp)
+        new_entries = self._write_segments(
+            stamped.drop("_srank"),
+            self._new_seg_ids(entries_prev, len(split_values)),
+            sizes,
+            index_conf,
+            reshape=None
+            if per_segment is None
+            else lambda k, seg: per_segment(split_values[k], seg),
+        )
         for _ in range(_COMMIT_RETRIES):
-            for i, entry in enumerate(new_entries):
-                entry["row_id_offset"] = base_offset + seg_starts[i]
+            offset = sum(e["n_rows"] for e in entries_prev)
+            for entry in new_entries:
+                entry["row_id_offset"] = offset
+                offset += entry["n_rows"]
             try:
                 self._publish(entries_prev + new_entries, base_version=base_v)
                 return new_entries
             except ManifestConflictError:
                 # appends commute: re-read and re-append at the fresh end
                 entries_prev, base_v = self.manifest_versioned()
-                base_offset = sum(e["n_rows"] for e in entries_prev)
         raise ManifestConflictError(
             f"batched append lost the manifest race {_COMMIT_RETRIES} times "
             f"in {self.path}; giving up"
@@ -1226,12 +1292,7 @@ class SegmentStore:
         version AND older than the orphan grace window, so another
         writer's written-but-unpublished segment survives the sweep."""
         self.reconcile()
-        doc = self.manifest_doc()
-        return self._apply_tombstones(
-            spark,
-            self._open_entries(spark, doc["segments"], defaults),
-            doc["tombstones"],
-        )
+        return self._live(spark, self.manifest_doc(), defaults=defaults)
 
     def pruned_entries(
         self, predicates: list[tuple], at_version: int | None = None
@@ -1269,34 +1330,13 @@ class SegmentStore:
             if at_version is None
             else self.manifest_doc_at(at_version)
         )
-        return self._apply_tombstones(
+        # prune the SAME doc the tombstones come from (one read)
+        return self._live(
             spark,
-            self._open_superset(
-                spark,
-                # prune the SAME doc the tombstones come from (one read)
-                [e for e in doc["segments"] if _entry_overlaps(e, predicates)],
-                doc["segments"],
-                defaults,
-            ),
-            doc["tombstones"],
+            doc,
+            [e for e in doc["segments"] if _entry_overlaps(e, predicates)],
+            defaults,
         )
-
-    def _open_superset(
-        self,
-        spark: SparkSession,
-        entries: list[dict],
-        all_entries: list[dict],
-        defaults: dict[str, object] | None,
-    ) -> DataFrame:
-        """Open a PRUNED entry subset, keeping the store's data schema
-        even when pruning proved every segment empty (callers apply the
-        row filter to the result — an empty row_id-only frame would break
-        them): plan one segment filtered to false instead."""
-        if not entries and all_entries:
-            return self._open_entries(spark, all_entries[:1], defaults).filter(
-                F.lit(False)
-            )
-        return self._open_entries(spark, entries, defaults)
 
     def pruned_entries_point(
         self, col: str, value, at_version: int | None = None
@@ -1348,15 +1388,8 @@ class SegmentStore:
             if at_version is None
             else self.manifest_doc_at(at_version)
         )
-        return self._apply_tombstones(
-            spark,
-            self._open_superset(
-                spark,
-                self._pruned_point(doc["segments"], col, value),
-                doc["segments"],
-                defaults,
-            ),
-            doc["tombstones"],
+        return self._live(
+            spark, doc, self._pruned_point(doc["segments"], col, value), defaults
         )
 
     def approx_distinct(self, spark: SparkSession, col: str) -> int:
@@ -1376,8 +1409,10 @@ class SegmentStore:
         ]
         if missing:
             raise ValueError(
-                f"no {col!r} sketch for segments {missing}; write with "
-                f"sketch_cols=[{col!r}] (or compact to re-sketch)"
+                f"no {col!r} sketch for segments {missing}; write every "
+                f"segment with sketch_cols=[{col!r}] — compaction, purge and "
+                "optimize_zorder keep a sketch only when every segment they "
+                "absorb carries it"
             )
         blobs = [
             (bytearray(base64.b64decode(e["sketches"][col])),) for e in entries
@@ -1434,18 +1469,36 @@ class SegmentStore:
         missing = [
             e["segment_id"]
             for e in entries
-            if not fsio.is_dir(
-                os.path.join(self.path, f"seg-{e['segment_id']:05d}")
-            )
+            if not fsio.is_dir(self._seg_path(e["segment_id"]))
         ]
         if missing:
             raise ValueError(
                 f"snapshot version {version} is no longer readable: "
                 f"segments {missing} were vacuumed"
             )
-        return self._apply_tombstones(
-            spark, self._open_entries(spark, entries, defaults), doc["tombstones"]
-        )
+        return self._live(spark, doc, defaults=defaults)
+
+    def _live(
+        self,
+        spark: SparkSession,
+        doc: dict,
+        entries: list[dict] | None = None,
+        defaults: dict[str, object] | None = None,
+    ) -> DataFrame:
+        """The tombstone-filtered view of ``entries`` (default: all of
+        ``doc``'s segments) under ``doc``'s tombstones — entries and
+        tombstones from ONE manifest read, so no commit can land between
+        them. A pruned subset that is empty keeps the store's data schema
+        (callers apply a row filter to the result; a row_id-only frame
+        would break them): one segment is planned, filtered to false."""
+        segs = doc["segments"]
+        if entries is None:
+            entries = segs
+        if entries or not segs:
+            data = self._open_entries(spark, entries, defaults)
+        else:
+            data = self._open_entries(spark, segs[:1], defaults).filter(F.lit(False))
+        return self._apply_tombstones(spark, data, doc["tombstones"])
 
     def _apply_tombstones(
         self, spark: SparkSession, df: DataFrame, tombstones: list[dict]
@@ -1515,9 +1568,7 @@ class SegmentStore:
         delete_where for the full concurrency contract)."""
         doc, base_v = self.manifest_doc_versioned()
         epoch = doc["renumber_epoch"]
-        live = self._apply_tombstones(
-            spark, self._open_entries(spark, doc["segments"]), doc["tombstones"]
-        )
+        live = self._live(spark, doc)
         del_id = self._claim_dir("del", len(doc["tombstones"]))
         fname = f"del-{del_id:05d}"
         fpath = os.path.join(self.path, fname)
@@ -1644,9 +1695,7 @@ class SegmentStore:
             # persisted source may pass materialize_source=False.
             source = source.localCheckpoint(eager=True)
         doc, base_v = self.manifest_doc_versioned()
-        live = self._apply_tombstones(
-            spark, self._open_entries(spark, doc["segments"]), doc["tombstones"]
-        )
+        live = self._live(spark, doc)
         # keys-only frames keep both joins narrow: the semi/anti sides
         # carry (row_id, keys) / keys, never full rows; AQE broadcasts
         # whichever side turns out small at runtime
@@ -1692,12 +1741,10 @@ class SegmentStore:
             # meaningless in THIS store's row space — re-stamp
             appended = appended.drop("row_id")
         if appended is not None:
-            seg_id = self._claim_seg_id(
-                max((e["segment_id"] for e in doc["segments"]), default=-1) + 1
-            )
-            seg_path = os.path.join(self.path, f"seg-{seg_id:05d}")
-            entry = self._write_segment_files(
-                appended, seg_id, index_conf, order_keys=order_keys,
+            (seg_id,) = self._new_seg_ids(doc["segments"])
+            seg_path = self._seg_path(seg_id)
+            (entry,) = self._write_segments(
+                appended, [seg_id], index_conf=index_conf, order_keys=order_keys,
                 sketch_cols=sketch_cols, bloom_cols=bloom_cols,
             )
             if entry["n_rows"] == 0:
@@ -1753,63 +1800,89 @@ class SegmentStore:
         segment with a dense row_id space (original order preserved) and
         an empty tombstone list — Lucene's forced merge dropping deleted
         docs, and the point where deleted bytes actually leave storage
-        (after vacuum reclaims the old version's files). This is the ONE
-        operation that renumbers row ids, so stored indexes are rebuilt
-        (pass index_conf) rather than shifted. No-op without tombstones.
+        (after vacuum reclaims the old version's files). No-op without
+        tombstones.
 
-        Unlike append/compact, a purge racing ANY concurrent commit is
-        stale by construction (it rewrote the whole row space), so a
-        conflict surfaces as ManifestConflictError: re-run against the
-        fresh store."""
+        A purge is the renumbering rewrite of :meth:`optimize_zorder` with
+        one segment, ordered by the old row_id: stored indexes are rebuilt
+        (pass index_conf) rather than shifted, sketches and blooms that
+        every old segment carried are rebuilt over the live rows, the
+        renumber epoch bumps, and a race with ANY concurrent commit
+        surfaces as ManifestConflictError (re-run against the fresh
+        store)."""
         doc, base_v = self.manifest_doc_versioned()
         if not doc["tombstones"]:
             return None
-        live = self._apply_tombstones(
-            spark,
-            self._open_entries(spark, doc["segments"], defaults),
-            doc["tombstones"],
-        )
+        live = self._live(spark, doc, defaults=defaults)
+        return self._renumber(doc, base_v, live, [], 1, index_conf, "purge")[0]
+
+    def _renumber(
+        self,
+        doc: dict,
+        base_v: int,
+        live: DataFrame,
+        keys: list[str],
+        n_segments: int,
+        index_conf: IndexConf | None,
+        op: str,
+    ) -> list[dict]:
+        """The renumbering rewrite shared by purge and optimize_zorder:
+        stamp dense new row ids over the LIVE rows of ``doc`` in order of
+        ``keys`` then the old row_id (ties keep their prior order), split
+        them into up to ``n_segments`` segments of contiguous ids, and
+        publish them as the whole store — tombstones materialized away,
+        batch_keys carried, sketch and bloom columns that every old
+        segment carried rebuilt, and the renumber epoch bumped so every
+        holder of pre-rewrite row_ids (delete_where retries, change-feed
+        consumers) detects that its ids name different rows now. It
+        rewrote the whole row space, so a race with ANY concurrent commit
+        is stale by construction: the staged segments are removed and the
+        conflict raised, never a partial layout."""
         stamped, n = with_row_id(
-            live.withColumnRenamed("row_id", "_purge_oldid"), ["_purge_oldid"],
+            live.withColumnRenamed("row_id", "_oldid"), [*keys, "_oldid"],
             return_count=True,
         )
-        stamped = stamped.drop("_purge_oldid")
-        new_id = self._claim_seg_id(
-            max((e["segment_id"] for e in doc["segments"]), default=-1) + 1
-        )
-        entry = self._write_segment_files(stamped, new_id, index_conf, n_rows=n)
-        entry["row_id_offset"] = 0
-        # carry every absorbed batch_key: replayed producers must still
-        # see their batches as committed after the purge
-        keys: set[str] = set()
-        for e in doc["segments"]:
-            if e.get("batch_key") is not None:
-                keys.add(e["batch_key"])
-            keys.update(e.get("batch_keys", ()))
-        if keys:
-            entry["batch_keys"] = sorted(keys)
+        stamped = stamped.drop(*keys, "_oldid")
+        m = max(1, min(n_segments, n))
+        size = -(-n // m)  # ceil
+        sizes = [s for s in (min(size, n - k * size) for k in range(m)) if s > 0]
+        if len(sizes) > 1:
+            stamped = stamped.localCheckpoint(eager=False)
+        segs = doc["segments"]
+
+        def shared(field: str) -> list[str]:
+            return sorted(set.intersection(*[set(e.get(field) or ()) for e in segs]))
+
+        seg_ids = self._new_seg_ids(segs, len(sizes) or 1)
         try:
+            entries = self._write_segments(
+                stamped, seg_ids, sizes or [0], index_conf,
+                sketch_cols=shared("sketches"),
+                bloom_cols=_bloomable(stamped, shared("blooms")),
+            )
+            offset = 0
+            for entry in entries:
+                entry["row_id_offset"] = offset
+                offset += entry["n_rows"]
+            self._carry_batch_keys(entries[0], segs)
             self._publish(
                 {
-                    "segments": [entry],
+                    "segments": entries,
                     "tombstones": [],
-                    # purge is the ONE renumbering operation: bump the
-                    # monotone epoch so every reader/writer holding
-                    # pre-purge row_ids (delete_where retries, change-feed
-                    # consumers) detects that its ids name different rows
                     "renumber_epoch": doc["renumber_epoch"] + 1,
                 },
                 base_version=base_v,
             )
         except ManifestConflictError:
-            fsio.remove_tree(os.path.join(self.path, f"seg-{new_id:05d}"))
+            for sid in seg_ids:
+                fsio.remove_tree(self._seg_path(sid))
             raise ManifestConflictError(
-                f"purge raced a concurrent commit in {self.path}: the "
-                "rewritten row space is stale — re-run purge against the "
+                f"{op} raced a concurrent commit in {self.path}: the "
+                f"rewritten row space is stale — re-run {op} against the "
                 "fresh store"
             ) from None
         self.reconcile()
-        return entry
+        return entries
 
     def optimize_zorder(
         self,
@@ -1832,17 +1905,19 @@ class SegmentStore:
 
         Column rebase bounds come from the MANIFEST zone maps (driver-side
         metadata — no stats job; one fallback agg only for columns the
-        footers could not bound). Like ``purge`` this is a RENUMBERING
-        rewrite: tombstones are materialized away and the renumber epoch
-        bumps, so change-feed consumers get the clean FullRefreshRequired
-        signal and racing writers' stale id-lists are detected. A conflict
-        with ANY concurrent commit surfaces as ManifestConflictError
-        (re-run against the fresh store), never a partial layout.
+        footers could not bound). Like ``purge`` (which is this rewrite
+        with one segment) it RENUMBERS: tombstones are materialized away
+        and the renumber epoch bumps, so change-feed consumers get the
+        clean FullRefreshRequired signal and racing writers' stale
+        id-lists are detected. A conflict with ANY concurrent commit
+        surfaces as ManifestConflictError (re-run against the fresh
+        store), never a partial layout.
 
         Scale: one full rewrite of live rows — the same cost class as
         purge/compact, scheduled at the same maintenance cadence; the sort
         is a required range distribution (AQE-sized), and each segment
-        write is a row_id-range slice of the one stamped plan."""
+        write is a row_id-range slice of the one checkpointed stamped
+        plan."""
         from iodf_spark.functions.zorder import zorder_key_expr
 
         if not cols:
@@ -1850,11 +1925,7 @@ class SegmentStore:
         doc, base_v = self.manifest_doc_versioned()
         if not doc["segments"]:
             return []
-        live = self._apply_tombstones(
-            spark,
-            self._open_entries(spark, doc["segments"], defaults),
-            doc["tombstones"],
-        )
+        live = self._live(spark, doc, defaults=defaults)
         # rebase bounds: caller-supplied domains win (a fixed, data-
         # independent layout — also what makes the rewrite reproducible
         # by an external engine); otherwise fold the per-segment zone
@@ -1890,115 +1961,11 @@ class SegmentStore:
             "spark",
             bits=bits,
         )
-        # deterministic total order: z-key, then the PRE-rewrite id as the
-        # tie-break (z collisions keep their prior relative order)
-        stamped, n = with_row_id(
-            live.withColumnRenamed("row_id", "_zoldid").withColumn(
-                "_zkey", F.expr(zkey)
-            ),
-            ["_zkey", "_zoldid"],
-            return_count=True,
+        m = int(n_segments) if n_segments else len(doc["segments"])
+        return self._renumber(
+            doc, base_v, live.withColumn("_zkey", F.expr(zkey)), ["_zkey"], m,
+            index_conf, "optimize_zorder",
         )
-        stamped = stamped.drop("_zkey", "_zoldid")
-        if n == 0:
-            return []
-        m = max(1, int(n_segments) if n_segments else len(doc["segments"]))
-        m = min(m, n)
-        size = -(-n // m)  # ceil
-        new_ids = [
-            self._claim_seg_id(
-                max((e["segment_id"] for e in doc["segments"]), default=-1) + 1 + k
-            )
-            for k in range(m)
-        ]
-        entries = []
-        import uuid
-
-        tmp = os.path.join(self.path, f"_zorder_tmp_{uuid.uuid4().hex[:8]}")
-        try:
-            # ONE partitioned write for every z-segment (not M filtered
-            # re-reads of the stamped plan): contiguous id blocks mean the
-            # segment-LOCAL id is just row_id mod size and the split id is
-            # row_id div size, so a single data pass lands each segment in
-            # its own partition directory, renamed into seg-*/data below
-            other = [c for c in stamped.columns if c != "row_id"]
-            prev_tst = spark.conf.get("spark.sql.parquet.outputTimestampType")
-            spark.conf.set(
-                "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-            )
-            try:
-                (
-                    stamped.select(
-                        F.pmod(F.col("row_id"), F.lit(size)).alias("row_id"),
-                        *other,
-                        # integer div, not float `/`: float quotients lose
-                        # exactness past 2^53 row ids
-                        F.expr(f"cast(row_id div {size} as int)").alias("_seg"),
-                    )
-                    .write.mode("overwrite")
-                    .option("compression", self.compression)
-                    .partitionBy("_seg")
-                    .parquet(tmp)
-                )
-            finally:
-                spark.conf.set("spark.sql.parquet.outputTimestampType", prev_tst)
-            for k, sid in enumerate(new_ids):
-                lo, hi = k * size, min((k + 1) * size, n)
-                seg_path = os.path.join(self.path, f"seg-{sid:05d}")
-                fsio.rename_dir(os.path.join(tmp, f"_seg={k}"), os.path.join(seg_path, "data"))
-                entry = {
-                    "segment_id": sid,
-                    "n_rows": int(hi - lo),
-                    "indexed": index_conf is not None,
-                    "stats": _footer_stats(os.path.join(seg_path, "data")),
-                }
-                if index_conf is not None:
-                    seg_df = spark.read.parquet(os.path.join(seg_path, "data"))
-                    ix = build_index(
-                        seg_df, index_conf, bucket_size=self.bucket_size,
-                        n_rows=hi - lo,
-                    )
-                    (
-                        ix.orderBy("col_name", "value_kind", "value_str", "bucket")
-                        .write.mode("overwrite")
-                        .option("compression", self.compression)
-                        .partitionBy("col_name")
-                        .parquet(os.path.join(seg_path, "index"))
-                    )
-                    entry["indexed_cols"] = sorted(index_conf.columns(seg_df))
-                entry["row_id_offset"] = lo
-                entries.append(entry)
-            fsio.remove_tree(tmp)
-            # carry every absorbed batch_key (same exactly-once contract
-            # as purge): replayed producers must still see their batches
-            keys: set[str] = set()
-            for e in doc["segments"]:
-                if e.get("batch_key") is not None:
-                    keys.add(e["batch_key"])
-                keys.update(e.get("batch_keys", ()))
-            if keys:
-                entries[0]["batch_keys"] = sorted(keys)
-            self._publish(
-                {
-                    "segments": entries,
-                    "tombstones": [],
-                    # a z-rewrite renumbers like purge: bump the epoch so
-                    # holders of pre-rewrite row_ids detect the change
-                    "renumber_epoch": doc["renumber_epoch"] + 1,
-                },
-                base_version=base_v,
-            )
-        except ManifestConflictError:
-            for sid in new_ids:
-                fsio.remove_tree(os.path.join(self.path, f"seg-{sid:05d}"))
-            fsio.remove_tree(tmp)
-            raise ManifestConflictError(
-                f"optimize_zorder raced a concurrent commit in {self.path}: "
-                "the rewritten row space is stale — re-run against the "
-                "fresh store"
-            ) from None
-        self.reconcile()
-        return entries
 
     def _open_entries(
         self,
@@ -2010,7 +1977,7 @@ class SegmentStore:
             return spark.createDataFrame([], "row_id long")
         parts = []
         for e in entries:
-            seg = spark.read.parquet(os.path.join(self.path, f"seg-{e['segment_id']:05d}", "data"))
+            seg = spark.read.parquet(self._seg_path(e["segment_id"], "data"))
             parts.append(
                 seg.withColumn("row_id", F.col("row_id") + F.lit(e["row_id_offset"]))
             )
@@ -2023,6 +1990,42 @@ class SegmentStore:
                 if col in out.columns:
                     out = out.withColumn(col, F.coalesce(F.col(col), F.lit(dv)))
         return out
+
+    def _plan_read(
+        self,
+        spark: SparkSession,
+        preds: list[tuple],
+        keep: "Callable[[Iterable[bool]], bool]",
+        defaults: dict[str, object] | None,
+    ) -> tuple[DataFrame, DataFrame | None, int, dict]:
+        """The prelude every store planner shares: ONE manifest read (so
+        entries, tombstones and the total row count come from the SAME doc
+        — re-reading between pruning layers lets a commit land in the gap
+        and yields a mixed-version plan, e.g. old tombstones over new
+        survivors), manifest pruning (a segment survives when ``keep``
+        holds over its per-predicate verdicts: zone maps for every
+        predicate, blooms for equalities — zero Spark jobs), and the
+        pruned, tombstone-filtered data. Returns (data, merged index of
+        the survivors or None when some survivor does not cover every
+        predicate column, total rows, plan report)."""
+        doc = self.manifest_doc()
+        entries = doc["segments"]
+        survivors = [
+            e for e in entries if keep(_pred_allows(e, p) for p in preds)
+        ]
+        plan = {
+            "segments": len(entries),
+            "survivors": len(survivors),
+            "pruned": len(entries) - len(survivors),
+        }
+        data = self._live(spark, doc, survivors, defaults)
+        covered = survivors and all(
+            e.get("indexed")
+            and all(p[0] in e.get("indexed_cols", ()) for p in preds)
+            for e in survivors
+        )
+        ix = self._merged_index_frame(spark, survivors, base=0) if covered else None
+        return data, ix, sum(e["n_rows"] for e in entries), plan
 
     def smart_filter(
         self,
@@ -2051,48 +2054,15 @@ class SegmentStore:
         predicate column must be indexed as raw values (default
         analyzer) for the index path to mean equality — same caveat as
         ``access.smart_filter``."""
-        from iodf_spark.operators.access import smart_filter as _sf
-
-        # ONE manifest read per call: entries, tombstones and the total
-        # row count must come from the SAME doc — re-reading between
-        # pruning layers lets a commit land in the gap and yields a
-        # mixed-version plan (e.g. old tombstones over new survivors:
-        # freshly deleted rows reappear)
-        doc = self.manifest_doc()
-        entries = doc["segments"]
-        total = sum(e["n_rows"] for e in entries)
-        survivors = [
-            e
-            for e in self._pruned_point(entries, col, value)
-            if _entry_overlaps(e, [(col, value, value)])
-        ]
-        plan = {
-            "segments": len(entries),
-            "survivors": len(survivors),
-            "pruned": len(entries) - len(survivors),
-        }
-        data = self._apply_tombstones(
-            spark,
-            self._open_superset(spark, survivors, entries, defaults),
-            doc["tombstones"],
-        )
-        if not survivors:
-            plan["path"] = "pruned_all"
-            return data.filter(F.col(col) == F.lit(value)), plan
-        covered = all(
-            e.get("indexed") and col in e.get("indexed_cols", ())
-            for e in survivors
-        )
-        if covered:
-            ix = self._merged_index_frame(spark, survivors, base=0)
-            rows, path = _sf(
+        data, ix, total, plan = self._plan_read(spark, [(col, value)], all, defaults)
+        if ix is not None:
+            rows, plan["path"] = access.smart_filter(
                 data, ix, col, value, total, threshold,
                 bucket_size=self.bucket_size,
             )
-            plan["path"] = path
             return rows, plan
-        plan["path"] = "scan"
-        return data.filter(F.col(col) == F.lit(value)), plan
+        plan["path"] = "pruned_all" if not plan["survivors"] else "scan"
+        return data.filter(access._scan_pred((col, value))), plan
 
     def smart_filter_all(
         self,
@@ -2111,40 +2081,11 @@ class SegmentStore:
         (one batched plan_stats aggregation for every key). At 100 TB a
         `user = X AND ts BETWEEN a AND b` touches the handful of segments
         both layers allow, then posting lists, never the corpus."""
-        from iodf_spark.operators.access import smart_filter_all as _sfa
-
         if not preds:
             raise ValueError("smart_filter_all needs at least one predicate")
-        # one manifest read per call (see smart_filter)
-        doc = self.manifest_doc()
-        entries = doc["segments"]
-        total = sum(e["n_rows"] for e in entries)
-        ranges = [
-            (p[0], p[1], p[2]) if len(p) == 3 else (p[0], p[1], p[1])
-            for p in preds
-        ]
-        survivors = [e for e in entries if _entry_overlaps(e, ranges)]
-        for p in preds:
-            if len(p) == 2:
-                survivors = self._pruned_point(survivors, p[0], p[1])
-        plan = {
-            "segments": len(entries),
-            "survivors": len(survivors),
-            "pruned": len(entries) - len(survivors),
-        }
-        data = self._apply_tombstones(
-            spark,
-            self._open_superset(spark, survivors, entries, defaults),
-            doc["tombstones"],
-        )
-        covered = survivors and all(
-            e.get("indexed")
-            and all(p[0] in e.get("indexed_cols", ()) for p in preds)
-            for e in survivors
-        )
-        if covered:
-            ix = self._merged_index_frame(spark, survivors, base=0)
-            rows, routed = _sfa(
+        data, ix, total, plan = self._plan_read(spark, preds, all, defaults)
+        if ix is not None:
+            rows, routed = access.smart_filter_all(
                 data, ix, preds, total, threshold,
                 bucket_size=self.bucket_size,
             )
@@ -2153,17 +2094,9 @@ class SegmentStore:
             }
             return rows, plan
         plan["routed"] = {"index": [], "scan": [p[0] for p in preds]}
-        out = data
         for p in preds:
-            if len(p) == 2:
-                out = out.filter(F.col(p[0]) == F.lit(p[1]))
-            else:
-                col, lo, hi = p
-                if lo is not None:
-                    out = out.filter(F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    out = out.filter(F.col(col) <= F.lit(hi))
-        return out, plan
+            data = data.filter(access._scan_pred(p))
+        return data, plan
 
     def smart_filter_any(
         self,
@@ -2178,64 +2111,17 @@ class SegmentStore:
         equalities), then ``access.smart_filter_any`` decides one
         union-of-probes semi join vs one OR-filter scan over the
         survivors from the stored stats."""
-        from iodf_spark.operators.access import smart_filter_any as _sfy
-
         if not preds:
             raise ValueError("smart_filter_any needs at least one predicate")
-        # one manifest read per call (see smart_filter)
-        doc = self.manifest_doc()
-        entries = doc["segments"]
-        total = sum(e["n_rows"] for e in entries)
-
-        def arm_allows(e: dict, p: tuple) -> bool:
-            if len(p) == 3:
-                return _entry_overlaps(e, [p])
-            if not _entry_overlaps(e, [(p[0], p[1], p[1])]):
-                return False
-            b = (e.get("blooms") or {}).get(p[0])
-            return b is None or _bloom_may_contain(b, p[1])
-
-        survivors = [e for e in entries if any(arm_allows(e, p) for p in preds)]
-        plan = {
-            "segments": len(entries),
-            "survivors": len(survivors),
-            "pruned": len(entries) - len(survivors),
-        }
-        data = self._apply_tombstones(
-            spark,
-            self._open_superset(spark, survivors, entries, defaults),
-            doc["tombstones"],
-        )
-        covered = survivors and all(
-            e.get("indexed")
-            and all(p[0] in e.get("indexed_cols", ()) for p in preds)
-            for e in survivors
-        )
-        if covered:
-            ix = self._merged_index_frame(spark, survivors, base=0)
-            rows, path = _sfy(
+        data, ix, total, plan = self._plan_read(spark, preds, any, defaults)
+        if ix is not None:
+            rows, plan["path"] = access.smart_filter_any(
                 data, ix, preds, total, threshold,
                 bucket_size=self.bucket_size,
             )
-            plan["path"] = path
             return rows, plan
         plan["path"] = "scan"
-        cond = None
-        for p in preds:
-            if len(p) == 2:
-                term = F.col(p[0]) == F.lit(p[1])
-            else:
-                col, lo, hi = p
-                term = None
-                if lo is not None:
-                    term = F.col(col) >= F.lit(lo)
-                if hi is not None:
-                    t2 = F.col(col) <= F.lit(hi)
-                    term = t2 if term is None else (term & t2)
-                if term is None:
-                    term = F.col(col).isNotNull()
-            cond = term if cond is None else (cond | term)
-        return data.filter(cond), plan
+        return data.filter(access._scan_any(preds)), plan
 
     def open_index(self, spark: SparkSession) -> DataFrame:
         """Multi-segment index view: per-segment posting rows shifted into
@@ -2250,12 +2136,6 @@ class SegmentStore:
         arrays split in place, dense words word/bit-shift, never exploded
         to ids) and one posting-ROW shuffle regroups the straddling
         buckets; both encodings survive the shift."""
-        from iodf_spark.plans.rowset import (
-            _POPCOUNT,
-            regroup_posting_contribs,
-            shift_posting_contribs,
-        )
-
         entries = [e for e in self.manifest() if e.get("indexed")]
         if not entries:
             raise ValueError("no indexed segments")
@@ -2284,9 +2164,7 @@ class SegmentStore:
         aligned = all((e["row_id_offset"] - base) % bs == 0 for e in entries)
         parts = []
         for e in entries:
-            ix = spark.read.parquet(
-                os.path.join(self.path, f"seg-{e['segment_id']:05d}", "index")
-            )
+            ix = spark.read.parquet(self._seg_path(e["segment_id"], "index"))
             if "words" not in ix.columns:
                 ix = ix.withColumn("words", F.lit(None).cast("array<long>"))
             off = e["row_id_offset"] - base
@@ -2391,10 +2269,7 @@ class SegmentStore:
         base = run[0]["row_id_offset"]
         rebased = [dict(e, row_id_offset=e["row_id_offset"] - base) for e in run]
         merged = self._open_entries(spark, rebased, defaults)
-        new_id = self._claim_seg_id(max(e["segment_id"] for e in entries) + 1)
-        entry = self._write_segment_files(
-            merged, new_id, index_conf, n_rows=sum(e["n_rows"] for e in run)
-        )
+        index_df = indexed_cols = None
         if index_conf is None and all(e.get("indexed") for e in run):
             # MERGE the run's stored indexes instead of dropping (or
             # re-deriving) them — the reference's writeMergedIndexedDf
@@ -2403,23 +2278,12 @@ class SegmentStore:
             # bucket-aligned; bucket-local word/bit shifts otherwise) and
             # no document is re-tokenized, which at 100 TB is the
             # difference between metadata-sized and corpus-sized compaction
-            # index cost.
-            ixm = self._merged_index_frame(spark, run, base=base)
-            (
-                ixm.repartition("col_name")
-                .sortWithinPartitions("value_kind", "value_str", "bucket")
-                .write.mode("overwrite")
-                .partitionBy("col_name")
-                .parquet(os.path.join(self.path, f"seg-{new_id:05d}", "index"))
+            # index cost. The merged index goes through the same writer
+            # and layout as every built one.
+            index_df = self._merged_index_frame(spark, run, base=base)
+            indexed_cols = sorted(
+                set.intersection(*[set(e.get("indexed_cols", ())) for e in run])
             )
-            entry["indexed"] = True
-            cols_sets = [set(e.get("indexed_cols", ())) for e in run]
-            merged_cols = set.intersection(*cols_sets) if cols_sets else set()
-            if merged_cols:
-                entry["indexed_cols"] = sorted(merged_cols)
-        merged_sketches = self._union_sketches(spark, run)
-        if merged_sketches:
-            entry["sketches"] = merged_sketches
         # blooms compose like sketches: bitwise OR is exactly the bloom of
         # the union (same hash geometry), so compaction keeps point-skip
         # metadata without rescanning data — the free fast path. But a
@@ -2430,9 +2294,9 @@ class SegmentStore:
         # so one extra aggregation per column restores the target fpp
         # instead of letting pruning quietly decay at every merge level.
         bl_sets = [e.get("blooms") or {} for e in run]
-        shared = set.intersection(*[set(b) for b in bl_sets]) if bl_sets else set()
+        shared = set.intersection(*[set(b) for b in bl_sets])
         merged_blooms, rebuild_cols = {}, []
-        for c in shared:
+        for c in sorted(shared):
             geoms = {(b[c]["m"], b[c]["k"]) for b in bl_sets}
             if len(geoms) == 1:
                 m_, k_ = geoms.pop()
@@ -2444,32 +2308,14 @@ class SegmentStore:
                         merged_blooms[c]["kind"] = kinds.pop()
                     continue
             rebuild_cols.append(c)
-        for c in sorted(rebuild_cols):
-            m_, k_ = _bloom_geometry(entry["n_rows"])
-            try:
-                bits, fill = _bloom_build(merged, c, m_, k_)
-            except ValueError:  # type widened out of the bloomable family
-                continue
-            if fill <= _BLOOM_MAX_FILL:
-                merged_blooms[c] = {
-                    "m": m_,
-                    "k": k_,
-                    "bits": bits,
-                    "kind": merged.schema[c].dataType.simpleString(),
-                }
-        if merged_blooms:
-            entry["blooms"] = merged_blooms
-        # carry the run members' idempotency keys forward: an idempotent
-        # producer replay (crash after publish, before checkpoint advance)
-        # that races a maintenance compaction must still see its batch_key
-        # as committed, or it silently re-appends the micro-batch
-        keys: set[str] = set()
-        for e in run:
-            if e.get("batch_key") is not None:
-                keys.add(e["batch_key"])
-            keys.update(e.get("batch_keys", ()))
-        if keys:
-            entry["batch_keys"] = sorted(keys)
+        (new_id,) = self._new_seg_ids(entries)
+        (entry,) = self._write_segments(
+            merged, [new_id], [sum(e["n_rows"] for e in run)], index_conf,
+            index_df=index_df, indexed_cols=indexed_cols,
+            bloom_cols=_bloomable(merged, rebuild_cols),
+            sketches=self._union_sketches(spark, run), blooms=merged_blooms,
+        )
+        self._carry_batch_keys(entry, run)
         entry["row_id_offset"] = base
         run_ids = [e["segment_id"] for e in run]
         for _ in range(_COMMIT_RETRIES):
@@ -2498,9 +2344,7 @@ class SegmentStore:
                     None,
                 )
                 if pos is None or fresh[pos]["row_id_offset"] != base:
-                    fsio.remove_tree(
-                        os.path.join(self.path, f"seg-{new_id:05d}"),
-                    )
+                    fsio.remove_tree(self._seg_path(new_id))
                     raise ManifestConflictError(
                         f"compact_run [{start}, {end}) raced a concurrent "
                         f"compaction in {self.path}: the run is no longer "

@@ -788,13 +788,18 @@ def stream_neardup_pairs(
          append surviving pairs to the result store;
       4. append the new bands + shingles to the state stores.
 
-    A pair is discovered exactly once — in the batch where its LATER
-    member arrives — so the union of all batch outputs equals the one-shot
-    batch LSH over the full corpus, independent of micro-batch boundaries
-    and arrival order. State grows linearly in corpus size (8-byte band
-    keys + shingle arrays), is partitioned parquet (bucketable by band
-    key at scale), and is never collected or broadcast as a whole: every
-    per-batch join is new-side × store with the small NEW side driving.
+    A pair is discovered in the batch where its LATER member arrives, so
+    the union of all batch outputs equals the one-shot batch LSH over the
+    full corpus, independent of micro-batch boundaries and arrival order.
+    Delivery of the pairs store is AT-LEAST-ONCE: a foreachBatch retry
+    after the pairs append committed appends that batch's pairs again.
+    The write order below keeps the STATE stores free of duplicates, and
+    :func:`read_neardup_pairs` returns each (doc_a, doc_b) once; read the
+    pairs through it, not the raw parquet. State grows linearly in corpus
+    size (8-byte band keys + shingle arrays), is partitioned parquet
+    (bucketable by band key at scale), and is never collected or broadcast
+    as a whole: every per-batch join is new-side × store with the small
+    NEW side driving.
     """
     import os
 
@@ -917,8 +922,10 @@ def _read_sink_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
 
 
 def read_neardup_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Accumulated (doc_a, doc_b, jaccard) result of stream_neardup_pairs;
-    empty-but-typed when no pair ever cleared the threshold."""
+    """Accumulated (doc_a, doc_b, jaccard) result of stream_neardup_pairs,
+    one row per pair even when a retried micro-batch appended its pairs
+    twice (the sink is at-least-once); empty-but-typed when no pair ever
+    cleared the threshold."""
     import os
 
     from pyspark.sql import types as T
@@ -930,7 +937,9 @@ def read_neardup_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
             T.StructField("jaccard", T.DoubleType()),
         ]
     )
-    return _read_sink_or_empty(spark, os.path.join(state_dir, "pairs"), schema)
+    return _read_sink_or_empty(
+        spark, os.path.join(state_dir, "pairs"), schema
+    ).dropDuplicates(["doc_a", "doc_b"])
 
 
 # --------------------------------------------------------------------------

@@ -59,3 +59,33 @@ def test_missing_sketch_raises_with_segment_ids(spark, store):
     # sketch (a gap would silently undercount) rather than faking one
     store.compact(spark)
     assert "sketches" not in store.manifest()[0]
+
+
+@pytest.mark.parametrize("rewrite", ["purge", "optimize_zorder"])
+def test_renumbering_rewrites_rebuild_sketches_and_blooms(spark, store, rewrite):
+    """purge and optimize_zorder rewrite the live rows; the sketch and
+    bloom columns every old segment carried must come back, rebuilt over
+    the SURVIVING rows (a union of the old sketches would still count
+    the deleted ones)."""
+    for lo in (0, 600):
+        df = spark.range(lo, lo + 600).select(
+            F.col("id").alias("k"), (F.col("id") % 40).alias("cat")
+        )
+        store.write_segment(df, order_keys=["k"], sketch_cols=["cat"], bloom_cols=["k"])
+    store.delete_where(spark, "cat >= 20")
+    if rewrite == "purge":
+        store.purge(spark)
+    else:
+        store.optimize_zorder(spark, ["k"], bits=6, n_segments=2)
+    entries = store.manifest()
+    assert all("cat" in e["sketches"] and "k" in e["blooms"] for e in entries)
+    assert abs(store.approx_distinct(spark, "cat") - 20) <= 1
+    # the rebuilt blooms never drop the segment that holds a live key
+    live = store.open(spark).select("row_id", "k").orderBy("row_id").collect()
+    for r in live[:5] + live[-5:]:
+        (holder,) = [
+            e["segment_id"] for e in entries
+            if e["row_id_offset"] <= r["row_id"] < e["row_id_offset"] + e["n_rows"]
+        ]
+        kept = {e["segment_id"] for e in store.pruned_entries_point("k", r["k"])}
+        assert holder in kept

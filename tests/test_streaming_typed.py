@@ -158,6 +158,25 @@ def test_stream_neardup_equals_batch(spark, sf_dir, tmp_path):
     assert stream_pairs == batch_pairs
 
 
+def test_read_neardup_pairs_dedupes_a_retried_append(spark, tmp_path):
+    """The pairs sink is at-least-once: a foreachBatch retry after the
+    pairs append committed writes the same pairs file again. The reader
+    must still return one row per (doc_a, doc_b)."""
+    import shutil
+
+    from iodf_spark.streaming.ingest import read_neardup_pairs
+
+    pairs_dir = tmp_path / "state" / "pairs"
+    spark.createDataFrame(
+        [(1, 7, 0.9), (2, 5, 0.85)], "doc_a long, doc_b long, jaccard double"
+    ).coalesce(1).write.parquet(str(pairs_dir))
+    (part,) = pairs_dir.glob("part-*.parquet")
+    shutil.copy(part, pairs_dir / ("retry-" + part.name))  # the replayed append
+    assert spark.read.parquet(str(pairs_dir)).count() == 4
+    got = sorted(tuple(r) for r in read_neardup_pairs(spark, str(tmp_path / "state")).collect())
+    assert got == [(1, 7, 0.9), (2, 5, 0.85)]
+
+
 def test_ingest_app_id_is_fused_to_checkpoint_lifetime(tmp_path):
     """Idempotency keys must be scoped by a run identity that lives and
     dies with the checkpoint: same checkpoint -> same identity (replays
