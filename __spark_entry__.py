@@ -70,9 +70,11 @@ def _lineitem_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
         # q_bitmap_ops alone plans ~27 copies (9 combinators x 2-3 probe
         # subtrees), pure driver-side Catalyst time (guide §7.3 'very
         # large plans'). The checkpoint truncates the plan to a leaf scan
-        # of the same materialized partitions; the posting rows are KiB-
-        # to-MiB-sized at any corpus (bounded by key cardinality x
-        # buckets), so local blocks are safe where caching was.
+        # of the same materialized partitions. Its blocks sit in executor
+        # storage with no replica, and the truncated lineage cannot
+        # recompute them: losing an executor fails later probes. They grow
+        # with the corpus — sparse rows with key cardinality, and each
+        # dense key adds n/8 bytes of words.
         ix = idx.build_index(
             li,
             idx.IndexConf(include=["l_returnflag", "l_linestatus", "l_quantity"]),

@@ -1236,7 +1236,10 @@ def ann_store_seed(
     from .similarity import _infer_dim, ivf_build_store, ivfpq_build_store
 
     doc, v = corpus_store.manifest_doc_versioned()
-    snap = corpus_store.open(spark)
+    # build from the SAME version the cursor pins: a commit landing after
+    # the version read would otherwise be built in AND replayed by the
+    # next sync, whose ledger calls the window clean
+    snap = corpus_store.open_at(spark, v) if v else corpus_store.open(spark)
     dim = dim or _infer_dim(snap, vec_col)
     _clear_deletes(store_path)
     if kind == "ivf":
@@ -1456,9 +1459,8 @@ def chunk_store_seed(
     doc, v = corpus_store.manifest_doc_versioned()
     from .similarity import ivf_build_store, ivfpq_build_store
 
-    emb = _chunk_vectors(
-        corpus_store.open(spark), id_col, text_col, dim, chunk_toks, overlap
-    )
+    snap = corpus_store.open_at(spark, v) if v else corpus_store.open(spark)
+    emb = _chunk_vectors(snap, id_col, text_col, dim, chunk_toks, overlap)
     _clear_deletes(store_path)
     if kind == "ivf":
         ivf_build_store(

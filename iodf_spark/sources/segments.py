@@ -35,7 +35,13 @@ needed because the index view is a DataFrame union, and probes prune by
 col_name partition + segment pruning.
 
 Writes publish atomically: data first, manifest last (tmp + rename —
-Utils.scala:91-99 atomicWrite).
+Utils.scala:91-99 atomicWrite). ONE commit loop, ``SegmentStore._commit``,
+publishes every mutation with optimistic concurrency: it claims the
+version after the one the op read, and on a lost race re-reads and asks
+the op to rebuild its doc — appends re-offset, deletes subtract
+concurrent tombstones, a compaction relocates its run, and merge and the
+renumbering rewrites raise. An op reads each manifest version at most
+once.
 """
 
 from __future__ import annotations
@@ -421,6 +427,22 @@ def _seg_name(seg_id: int) -> str:
     return f"seg-{seg_id:05d}"
 
 
+def _versions(names: Iterable[str]) -> list[int]:
+    """The manifest versions among a store dir's ``names``, ascending."""
+    return sorted(
+        int(n[len("manifest-v"):-len(".json")])
+        for n in names
+        if n.startswith("manifest-v") and n.endswith(".json")
+    )
+
+
+def _refs(doc: dict) -> set[str]:
+    """The seg-* and del-* dir names a manifest doc references."""
+    return {_seg_name(e["segment_id"]) for e in doc["segments"]} | {
+        t["file"] for t in doc["tombstones"]
+    }
+
+
 def _cmp_lt(a, b) -> bool:
     """a < b when comparable; incomparable (mixed-type drift) -> False, which
     keeps the segment — the always-correct degradation."""
@@ -478,15 +500,11 @@ class SegmentStore:
 
     def manifest(self) -> list[dict]:
         """Current segment entries (see manifest_doc for the full doc) =
-        the HIGHEST archived version, not the manifest.json pointer. The
-        version files are the source of truth: each is claimed with an
-        atomic exclusive link (see _publish), so the maximum version is
-        always the latest committed state, while the pointer write is a
-        separate non-transactional step — two stalled writers could
-        interleave pointer replaces so it regresses to an older manifest
-        (review-caught). Reading max(version) makes a regressed pointer
-        harmless; the pointer stays as a human-readable convenience and
-        legacy fallback for pre-versioning stores."""
+        the HIGHEST archived version, not the manifest.json pointer: each
+        version is claimed with an atomic exclusive link (see _publish),
+        while the pointer write is a separate step that two stalled
+        writers could regress. The pointer stays as a human-readable
+        convenience and the legacy fallback of pre-versioning stores."""
         return self.manifest_doc()["segments"]
 
     def manifest_doc(self) -> dict:
@@ -496,25 +514,39 @@ class SegmentStore:
         return self.manifest_doc_versioned()[0]
 
     def manifest_doc_versioned(self) -> tuple[dict, int]:
-        """(doc, version) as one consistent read — the version is the
-        OCC base every multi-step writer must hand back to _publish, so a
-        commit landing anywhere between this read and the publish is
-        detected (version files are immutable; re-reading the chosen file
-        cannot tear)."""
-        vs = self.versions()
-        if vs:
-            return self.manifest_doc_at(vs[-1]), vs[-1]
-        if not fsio.exists(self._manifest_path):
-            return self._as_doc([]), 0
-        return self._as_doc(json.loads(fsio.read_text(self._manifest_path))), 0
+        """(doc, version) as one consistent read — the OCC base a writer
+        stages against and :meth:`_commit` publishes on top of."""
+        return self._head({})
 
     def manifest_versioned(self) -> tuple[list[dict], int]:
         doc, v = self.manifest_doc_versioned()
         return doc["segments"], v
 
-    def _publish(
-        self, entries: list[dict], base_version: int | None = None
-    ) -> None:
+    def _head(self, docs: dict[int, dict]) -> tuple[dict, int]:
+        """(newest doc, its version), read through :meth:`_doc`."""
+        vs = self.versions()
+        v = vs[-1] if vs else 0
+        return self._doc(docs, v), v
+
+    def _doc(self, docs: dict[int, dict], v: int) -> dict:
+        """Version ``v``'s doc through ``docs``, the versions one operation
+        has read or published: version files are immutable, so each is
+        read at most once per operation. Version 0 is a store without
+        version files: its legacy pointer, or the empty doc."""
+        if v not in docs:
+            if v:
+                docs[v] = self.manifest_doc_at(v)
+            else:
+                p = self._manifest_path
+                docs[v] = self._as_doc(
+                    json.loads(fsio.read_text(p)) if fsio.exists(p) else []
+                )
+        return docs[v]
+
+    def _version_path(self, v: int) -> str:
+        return os.path.join(self.path, f"manifest-v{v:06d}.json")
+
+    def _publish(self, doc: dict, base_version: int) -> None:
         """Atomically publish a new manifest AND archive it as an immutable
         numbered version (Delta/Iceberg-style snapshot log at manifest
         grain): every publish appends ``manifest-v<k>.json``; `open_at`
@@ -531,32 +563,18 @@ class SegmentStore:
         store, the link becomes a conditional put (if-none-match) — same
         protocol Delta/Iceberg use for their commit files.
 
-        ``base_version`` is the version the caller's ``entries`` were
-        DERIVED from (``manifest_versioned``); the publish claims exactly
+        ``doc`` is the full manifest doc to publish and ``base_version``
+        the version it was DERIVED from; the publish claims exactly
         ``base_version + 1``, so ANY commit that landed after the caller's
         read — no matter how long the caller spent writing segment files —
-        surfaces as a conflict instead of a lost update. Claiming
-        ``latest + 1`` at publish time (the None legacy path) only detects
-        races inside the publish call itself; every multi-step writer must
-        pass its read version.
-
-        ``entries`` may be a bare segment list (tombstones and
-        renumber_epoch carried over from the current doc) or a full
-        manifest doc."""
-        doc = (
-            dict(self.manifest_doc(), segments=entries)
-            if isinstance(entries, list)
-            else self._as_doc(entries)
-        )
+        surfaces as a conflict instead of a lost update. Writers publish
+        only through :meth:`_commit`."""
         # committed_at rides INSIDE the doc: object stores do not preserve
         # LastModified across COPY, so retention windows (vacuum
         # min_age_seconds) key on this timestamp, with file mtime only as
         # the legacy fallback for pre-round-12 manifests
         doc["committed_at"] = time.time()
-        v = (
-            base_version if base_version is not None
-            else (self.versions() or [0])[-1]
-        ) + 1
+        v = base_version + 1
         # the tmp buffer is written THROUGH the seam (round 12: no local
         # temp-file API — the strict object-store backend has no local
         # files at all) under a per-writer unique name, so concurrent
@@ -565,7 +583,7 @@ class SegmentStore:
             self.path, f"_pub-{uuid.uuid4().hex}.manifest.tmp"
         )
         fsio.atomic_write_text(tmp, json.dumps(doc, indent=1))
-        vpath = os.path.join(self.path, f"manifest-v{v:06d}.json")
+        vpath = self._version_path(v)
         if not fsio.link_claim(tmp, vpath):  # atomic claim: one winner per version
             fsio.remove_file(tmp)
             raise ManifestConflictError(
@@ -574,21 +592,82 @@ class SegmentStore:
             )
         fsio.atomic_replace(tmp, self._manifest_path)  # current pointer
 
+    def _commit(
+        self,
+        op: str,
+        docs: dict[int, dict],
+        v: int,
+        rebuild: "Callable[[dict], dict | None] | dict",
+        staged: list[str],
+    ) -> dict | None:
+        """THE commit loop of every store mutation: publish ``rebuild(doc)``
+        against the version of ``doc`` — first ``docs[v]``, which the op
+        staged its files against, then after each lost race the fresh
+        newest doc. ``rebuild`` returns the doc to publish, None when
+        nothing is left to publish, or raises ManifestConflictError when
+        the op does not commute with what landed. A plain doc in its place
+        is an op whose read set is the whole snapshot (merge, renumbering):
+        any lost race raises. Gives up after ``_COMMIT_RETRIES`` races;
+        whenever it raises or publishes nothing, the ``staged`` dirs are
+        removed. Returns the published doc, also kept in ``docs``."""
+        try:
+            for attempt in range(_COMMIT_RETRIES):
+                if callable(rebuild):
+                    new = rebuild(docs[v])
+                elif attempt:
+                    raise ManifestConflictError(
+                        f"{op} raced a concurrent commit in {self.path}: the "
+                        f"snapshot it read is stale — re-run {op} against "
+                        "the fresh store"
+                    )
+                else:
+                    new = rebuild
+                if new is None:
+                    break
+                try:
+                    self._publish(new, base_version=v)
+                except ManifestConflictError:
+                    v = self._head(docs)[1]
+                    continue
+                docs[v + 1] = new
+                return new
+            else:
+                raise ManifestConflictError(
+                    f"{op} lost the manifest race {_COMMIT_RETRIES} times in "
+                    f"{self.path}; giving up"
+                )
+        except ManifestConflictError:
+            for p in staged:
+                fsio.remove_tree(p)
+            raise
+        for p in staged:
+            fsio.remove_tree(p)
+        return None
+
+    @staticmethod
+    def _append_to(doc: dict, new: list[dict]) -> dict:
+        """``doc`` with the ``new`` entries at the end of its row space
+        (appends commute: a lost race re-offsets against the fresh doc)."""
+        offset = sum(e["n_rows"] for e in doc["segments"])
+        for e in new:
+            e["row_id_offset"] = offset
+            offset += e["n_rows"]
+        return dict(doc, segments=doc["segments"] + new)
+
     def versions(self) -> list[int]:
         """Available snapshot versions, ascending (1-based publish order)."""
-        out = []
-        for name in fsio.list_dir(self.path):
-            if name.startswith("manifest-v") and name.endswith(".json"):
-                out.append(int(name[len("manifest-v"):-len(".json")]))
-        return sorted(out)
+        return _versions(fsio.list_dir(self.path))
+
+    def _doc_at(self, version: int | None) -> dict:
+        """The doc at ``version``; the newest one for None."""
+        return self.manifest_doc() if version is None else self.manifest_doc_at(version)
 
     def manifest_at(self, version: int) -> list[dict]:
         return self.manifest_doc_at(version)["segments"]
 
     def manifest_doc_at(self, version: int) -> dict:
-        p = os.path.join(self.path, f"manifest-v{version:06d}.json")
         try:
-            raw = fsio.read_text(p)
+            raw = fsio.read_text(self._version_path(version))
         except FileNotFoundError:
             raise ValueError(
                 f"snapshot version {version} not found (have {self.versions()}"
@@ -621,12 +700,13 @@ class SegmentStore:
                     env[c] = [lo, hi]
         for c in env:
             full_cov[c] = all(c in (e.get("stats") or {}) for e in entries)
+        n_rows = sum(e["n_rows"] for e in entries)
+        n_dead = sum(t["n"] for t in doc["tombstones"])
         return {
             "n_segments": len(entries),
-            "n_rows": sum(e["n_rows"] for e in entries),
-            "n_deleted": sum(t["n"] for t in doc["tombstones"]),
-            "live_rows": sum(e["n_rows"] for e in entries)
-            - sum(t["n"] for t in doc["tombstones"]),
+            "n_rows": n_rows,
+            "n_deleted": n_dead,
+            "live_rows": n_rows - n_dead,
             # how many times the row space has been renumbered (purges):
             # consumers holding row_ids compare this against the epoch
             # they read at (see delete_where / read_changes / stream_changes)
@@ -776,14 +856,20 @@ class SegmentStore:
         its manifest entry does, and sweeping it mid-write destroys a
         commit in flight — Delta's VACUUM retention window, at segment
         grain. Pass 0 only when no other writer can be active."""
+        return self._sweep({}, grace_seconds)
+
+    def _sweep(
+        self, docs: dict[int, dict], grace_seconds: float | None = None
+    ) -> list[str]:
+        """:meth:`reconcile` through ``docs`` (see :meth:`_doc`): one
+        listing of the store dir gives both the retained versions, each
+        read at most once, and the sweep's candidates."""
         if grace_seconds is None:
             grace_seconds = self.orphan_grace_seconds
-        live = set()
-        for doc in [self.manifest_doc()] + [
-            self.manifest_doc_at(v) for v in self.versions()
-        ]:
-            live |= {_seg_name(e["segment_id"]) for e in doc["segments"]}
-            live |= {t["file"] for t in doc["tombstones"]}
+        names = fsio.list_dir(self.path)
+        live: set[str] = set()
+        for v in _versions(names) or [0]:
+            live |= _refs(self._doc(docs, v))
         now = time.time()
 
         def aged(p: str) -> bool:
@@ -801,7 +887,7 @@ class SegmentStore:
                 return True  # vanished while we looked: not ours to keep
 
         removed = []
-        for name in fsio.list_dir(self.path):
+        for name in names:
             full = os.path.join(self.path, name)
             if (
                 name.startswith(("seg-", "del-"))
@@ -852,6 +938,7 @@ class SegmentStore:
         Delta's VACUUM retention default solves the identical race; pass 0
         only when no concurrent reader can be active."""
         all_vs = self.versions()
+        docs = {v: self.manifest_doc_at(v) for v in all_vs}
         keep = set(all_vs[-max(keep_last, 1):])
         if min_age_seconds > 0:
             now = time.time()
@@ -864,46 +951,34 @@ class SegmentStore:
                 # VANISHED version file means nothing-to-retain; a read
                 # outage must propagate loudly, never silently age an
                 # in-window version out of the retention set.
-                with contextlib.suppress(FileNotFoundError, ValueError):
-                    ts = self.manifest_doc_at(v).get("committed_at")
-                    if ts is None:
-                        ts = fsio.mtime(
-                            os.path.join(self.path, f"manifest-v{v:06d}.json")
-                        )
-                    if now - ts < min_age_seconds:
-                        keep.add(v)
+                ts = docs[v].get("committed_at")
+                if ts is None:
+                    with contextlib.suppress(FileNotFoundError):
+                        ts = fsio.mtime(self._version_path(v))
+                if ts is not None and now - ts < min_age_seconds:
+                    keep.add(v)
         dropped_refs: set[str] = set()
         for v in all_vs:
             if v not in keep:
-                doc = self.manifest_doc_at(v)
-                dropped_refs |= {_seg_name(e["segment_id"]) for e in doc["segments"]}
-                dropped_refs |= {t["file"] for t in doc["tombstones"]}
-                fsio.remove_file(os.path.join(self.path, f"manifest-v{v:06d}.json"))
-        live = set()
-        for v in sorted(keep):
-            doc = self.manifest_doc_at(v)
-            live |= {_seg_name(e["segment_id"]) for e in doc["segments"]}
-            live |= {t["file"] for t in doc["tombstones"]}
-        removed = []
-        for name in sorted(dropped_refs - live):
+                dropped_refs |= _refs(docs[v])
+                fsio.remove_file(self._version_path(v))
+        live = set().union(*(_refs(docs[v]) for v in keep))
+        removed = sorted(dropped_refs - live)
+        for name in removed:
             fsio.remove_tree(os.path.join(self.path, name))
-            removed.append(name)
-        return removed + self.reconcile()
+        return removed + self._sweep(docs)
 
     # -- write ---------------------------------------------------------------
 
-    def _claim_seg_id(self, start_id: int) -> int:
-        """Allocate a segment id by ATOMICALLY creating its directory
+    def _claim_dir(self, prefix: str, start_id: int) -> int:
+        """Allocate a seg/del id by ATOMICALLY creating its directory
         (mkdir is exclusive): two writers that both read `max(id)+1` from
         the same committed manifest get DIFFERENT ids, so no two commits
-        can ever interleave files inside one seg-* dir. Ids claimed by a
-        commit that later loses its manifest race stay valid — segment ids
-        are names, concatenation order lives in the manifest list, so ids
-        need uniqueness, not density or monotonicity. On an object store
-        the mkdir becomes a conditional put of a marker key."""
-        return self._claim_dir("seg", start_id)
-
-    def _claim_dir(self, prefix: str, start_id: int) -> int:
+        can ever interleave files inside one dir. Ids claimed by a commit
+        that later loses its manifest race stay valid — ids are names,
+        concatenation order lives in the manifest list, so ids need
+        uniqueness, not density or monotonicity. On an object store the
+        mkdir becomes a conditional put of a marker key."""
         claim_id = start_id
         while not fsio.claim_dir(
             os.path.join(self.path, f"{prefix}-{claim_id:05d}")
@@ -917,7 +992,7 @@ class SegmentStore:
         ids: list[int] = []
         nxt = max((e["segment_id"] for e in entries), default=-1) + 1
         for _ in range(m):
-            ids.append(self._claim_seg_id(nxt))
+            ids.append(self._claim_dir("seg", nxt))
             nxt = ids[-1] + 1
         return ids
 
@@ -1159,24 +1234,22 @@ class SegmentStore:
         (compaction rewrites only already-committed entries and carries
         their batch_keys), which is exactly Delta's append-vs-append
         conflict-resolution rule."""
-        entries, base_v = self.manifest_versioned()
+        docs: dict[int, dict] = {}
+        doc, v = self._head(docs)
 
-        def committed() -> dict | None:
+        def committed(doc: dict) -> dict | None:
             # consult both the live key and keys absorbed into merged
             # segments (batch_keys) — compaction must not reopen the
             # exactly-once window (Delta retains txn appId/version actions
             # across compaction the same way)
-            if batch_key is not None:
-                for e in entries:
-                    if e.get("batch_key") == batch_key or batch_key in e.get(
-                        "batch_keys", ()
-                    ):
-                        return e
-            return None
+            return next((
+                e for e in doc["segments"] if batch_key is not None
+                and batch_key in (e.get("batch_key"), *e.get("batch_keys", ()))
+            ), None)
 
-        if (prior := committed()) is not None:
+        if (prior := committed(doc)) is not None:
             return prior
-        (seg_id,) = self._new_seg_ids(entries)
+        (seg_id,) = self._new_seg_ids(doc["segments"])
         (entry,) = self._write_segments(
             df, [seg_id], None if n_rows is None else [n_rows], index_conf,
             order_keys=order_keys, sketch_cols=sketch_cols,
@@ -1184,23 +1257,17 @@ class SegmentStore:
         )
         if batch_key is not None:
             entry["batch_key"] = batch_key
-        for _ in range(_COMMIT_RETRIES):
-            entry["row_id_offset"] = sum(e["n_rows"] for e in entries)
-            try:
-                self._publish(entries + [entry], base_version=base_v)
-                return entry
-            except ManifestConflictError:
-                entries, base_v = self.manifest_versioned()
-                if (prior := committed()) is not None:
-                    # the racing writer WAS us (replayed producer): drop
-                    # our duplicate files, adopt its commit
-                    fsio.remove_tree(self._seg_path(seg_id))
-                    return prior
-        raise ManifestConflictError(
-            f"append lost the manifest race {_COMMIT_RETRIES} times in "
-            f"{self.path}; giving up (segment files kept at {_seg_name(seg_id)} "
-            "pending reconcile)"
-        )
+
+        def rebuild(doc: dict) -> dict | None:
+            # a racing writer that committed our batch_key WAS us (a
+            # replayed producer): publish nothing — our duplicate files go
+            # with the staged dir — and adopt its commit
+            nonlocal prior
+            prior = committed(doc)
+            return None if prior is not None else self._append_to(doc, [entry])
+
+        self._commit("write_segment", docs, v, rebuild, [self._seg_path(seg_id)])
+        return prior or entry
 
     def write_segments_by(
         self,
@@ -1248,31 +1315,24 @@ class SegmentStore:
         }
         sizes = [int(counts.get(i, 0)) for i in range(len(split_values))]
         assert sum(sizes) == total
-        entries_prev, base_v = self.manifest_versioned()
+        docs: dict[int, dict] = {}
+        doc, v = self._head(docs)
+        seg_ids = self._new_seg_ids(doc["segments"], len(split_values))
         new_entries = self._write_segments(
             stamped.drop("_srank"),
-            self._new_seg_ids(entries_prev, len(split_values)),
+            seg_ids,
             sizes,
             index_conf,
             reshape=None
             if per_segment is None
             else lambda k, seg: per_segment(split_values[k], seg),
         )
-        for _ in range(_COMMIT_RETRIES):
-            offset = sum(e["n_rows"] for e in entries_prev)
-            for entry in new_entries:
-                entry["row_id_offset"] = offset
-                offset += entry["n_rows"]
-            try:
-                self._publish(entries_prev + new_entries, base_version=base_v)
-                return new_entries
-            except ManifestConflictError:
-                # appends commute: re-read and re-append at the fresh end
-                entries_prev, base_v = self.manifest_versioned()
-        raise ManifestConflictError(
-            f"batched append lost the manifest race {_COMMIT_RETRIES} times "
-            f"in {self.path}; giving up"
+        self._commit(
+            "write_segments_by", docs, v,
+            lambda doc: self._append_to(doc, new_entries),
+            [self._seg_path(sid) for sid in seg_ids],
         )
+        return new_entries
 
     # -- read ----------------------------------------------------------------
 
@@ -1291,8 +1351,9 @@ class SegmentStore:
         reconcile only removes dirs referenced by NO retained manifest
         version AND older than the orphan grace window, so another
         writer's written-but-unpublished segment survives the sweep."""
-        self.reconcile()
-        return self._live(spark, self.manifest_doc(), defaults=defaults)
+        docs: dict[int, dict] = {}
+        self._sweep(docs)
+        return self._live(spark, docs[max(docs)], defaults=defaults)
 
     def pruned_entries(
         self, predicates: list[tuple], at_version: int | None = None
@@ -1301,9 +1362,7 @@ class SegmentStore:
         range ``predicates`` = [(col, lo, hi), ...] (None = unbounded).
         Driver-side metadata only — no Spark job. ``at_version`` prunes a
         time-travel snapshot's manifest instead of the current one."""
-        entries = (
-            self.manifest() if at_version is None else self.manifest_at(at_version)
-        )
+        entries = self._doc_at(at_version)["segments"]
         return [e for e in entries if _entry_overlaps(e, predicates)]
 
     def open_pruned(
@@ -1324,12 +1383,10 @@ class SegmentStore:
         applies the actual row filter; pruning is a superset guarantee,
         identical to the reference's segment-skipping reads
         (MultiDf.scala:33-184 reads only the segments a view touches)."""
-        self.reconcile()
-        doc = (
-            self.manifest_doc()
-            if at_version is None
-            else self.manifest_doc_at(at_version)
-        )
+        docs: dict[int, dict] = {}
+        self._sweep(docs)
+        v = max(docs) if at_version is None else at_version
+        doc = docs[v] if v in docs else self.manifest_doc_at(v)
         # prune the SAME doc the tombstones come from (one read)
         return self._live(
             spark,
@@ -1350,10 +1407,7 @@ class SegmentStore:
         user id in arrival-ordered data) has a useless min/max envelope,
         but its bloom prunes every segment the user never touched —
         Parquet bloom filters / Delta file skipping, at segment grain."""
-        entries = (
-            self.manifest() if at_version is None else self.manifest_at(at_version)
-        )
-        return self._pruned_point(entries, col, value)
+        return self._pruned_point(self._doc_at(at_version)["segments"], col, value)
 
     @staticmethod
     def _pruned_point(entries: list[dict], col: str, value) -> list[dict]:
@@ -1383,11 +1437,7 @@ class SegmentStore:
         minus segments whose bloom proves ``col`` never equals ``value``
         (no false negatives — a superset guarantee like open_pruned; the
         caller still applies the row filter). Global row_ids unchanged."""
-        doc = (
-            self.manifest_doc()
-            if at_version is None
-            else self.manifest_doc_at(at_version)
-        )
+        doc = self._doc_at(at_version)
         return self._live(
             spark, doc, self._pruned_point(doc["segments"], col, value), defaults
         )
@@ -1540,7 +1590,7 @@ class SegmentStore:
         while the rows the caller asked to delete stay live)."""
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         return self._delete(
-            spark, lambda live: live.filter(pred).select("row_id")
+            spark, "delete_where", lambda live: live.filter(pred).select("row_id")
         )
 
     def delete_rows(
@@ -1559,72 +1609,62 @@ class SegmentStore:
         keyed = ids.select(F.col(key).alias(on)).distinct()
         return self._delete(
             spark,
+            "delete_rows",
             lambda live: live.join(keyed, on, "left_semi").select("row_id"),
         )
 
-    def _delete(self, spark: SparkSession, ids_of) -> dict:
-        """Shared tombstone-commit loop: ``ids_of(live_df) -> row_id df``
+    def _delete(self, spark: SparkSession, op: str, ids_of) -> dict:
+        """Shared tombstone commit: ``ids_of(live_df) -> row_id df``
         computes the victim set against the CURRENT live view (see
         delete_where for the full concurrency contract)."""
-        doc, base_v = self.manifest_doc_versioned()
+        docs: dict[int, dict] = {}
+        doc, v = self._head(docs)
         epoch = doc["renumber_epoch"]
-        live = self._live(spark, doc)
         del_id = self._claim_dir("del", len(doc["tombstones"]))
         fname = f"del-{del_id:05d}"
         fpath = os.path.join(self.path, fname)
-        ids_of(live).write.mode("overwrite").parquet(fpath)
+        ids_of(self._live(spark, doc)).write.mode("overwrite").parquet(fpath)
         # exact count from the Parquet footers just written — driver-side
         # metadata, zero extra Spark jobs (the write already produced them)
         n = _parquet_dir_rows(fpath)
         known = {t["file"] for t in doc["tombstones"]}
-        for _ in range(_COMMIT_RETRIES):
-            if n == 0:
-                fsio.remove_tree(fpath)
-                return {"file": None, "n": 0}
-            t = {"file": fname, "n": n}
-            try:
-                self._publish(
-                    dict(doc, tombstones=doc["tombstones"] + [t]),
-                    base_version=base_v,
+
+        def rebuild(doc: dict) -> dict | None:
+            nonlocal n
+            if doc["renumber_epoch"] != epoch:
+                # a purge landed after our read: our id-list names other
+                # rows now (writeMergedDf's single-writer renumbering
+                # discipline, Dfs.scala:222-228, made detectable)
+                raise ManifestConflictError(
+                    f"{op} raced a purge in {self.path}: the row space was "
+                    "renumbered, so the computed row_ids are stale — re-run "
+                    f"{op} against the fresh store"
                 )
-                return t
-            except ManifestConflictError:
-                doc, base_v = self.manifest_doc_versioned()
-                if doc["renumber_epoch"] != epoch:
-                    # a purge landed after our read: the row space was
-                    # renumbered, so the id-list we wrote is meaningless in
-                    # the fresh store — drop it and surface the conflict
-                    # (the same contract purge enforces for the reverse
-                    # ordering; writeMergedDf's single-writer renumbering
-                    # discipline, Dfs.scala:222-228, made detectable)
-                    fsio.remove_tree(fpath)
-                    raise ManifestConflictError(
-                        f"delete_where raced a purge in {self.path}: the row "
-                        "space was renumbered, so the computed row_ids are "
-                        "stale — re-run delete_where against the fresh store"
-                    ) from None
-                newly = [x for x in doc["tombstones"] if x["file"] not in known]
-                known = {x["file"] for x in doc["tombstones"]}
-                if newly:
-                    # a concurrent delete landed: keep sets disjoint by
-                    # subtracting its ids from ours (rewrite is safe — our
-                    # file is not yet referenced by any manifest)
-                    mine = spark.read.parquet(fpath).join(
-                        spark.read.parquet(
-                            *[os.path.join(self.path, x["file"]) for x in newly]
-                        ).select("row_id"),
-                        "row_id",
-                        "left_anti",
-                    )
-                    tmp = fpath + ".rewrite"
-                    mine.write.mode("overwrite").parquet(tmp)
-                    fsio.remove_tree(fpath)
-                    fsio.rename_dir(tmp, fpath)
-                    n = _parquet_dir_rows(fpath)
-        raise ManifestConflictError(
-            f"delete_where lost the manifest race {_COMMIT_RETRIES} times in "
-            f"{self.path}; giving up"
-        )
+            newly = [x for x in doc["tombstones"] if x["file"] not in known]
+            known.update(x["file"] for x in newly)
+            if newly:
+                # a concurrent delete landed: keep sets disjoint by
+                # subtracting its ids from ours (rewrite is safe — our
+                # file is not yet referenced by any manifest)
+                mine = spark.read.parquet(fpath).join(
+                    spark.read.parquet(
+                        *[os.path.join(self.path, x["file"]) for x in newly]
+                    ).select("row_id"),
+                    "row_id",
+                    "left_anti",
+                )
+                tmp = fpath + ".rewrite"
+                mine.write.mode("overwrite").parquet(tmp)
+                fsio.remove_tree(fpath)
+                fsio.rename_dir(tmp, fpath)
+                n = _parquet_dir_rows(fpath)
+            if n == 0:
+                return None
+            return dict(doc, tombstones=doc["tombstones"] + [{"file": fname, "n": n}])
+
+        if self._commit(op, docs, v, rebuild, [fpath]) is None:
+            return {"file": None, "n": 0}
+        return {"file": fname, "n": n}
 
     def merge_by_key(
         self,
@@ -1665,8 +1705,8 @@ class SegmentStore:
         CDC pre/post-image shape consumers already handle.
 
         Concurrency: SERIALIZABLE, abort-don't-retry. Appends and deletes
-        commute and their OCC loops retry, but a merge's read set is the
-        whole key column of the snapshot it planned against — ANY
+        commute and the commit loop retries them, but a merge's read set
+        is the whole key column of the snapshot it planned against — ANY
         intervening commit may have added or removed rows with matching
         keys, so retrying against a fresh manifest would silently merge
         against state the caller never saw. A lost race cleans its staged
@@ -1694,7 +1734,8 @@ class SegmentStore:
             # source; callers with a provably deterministic, already-
             # persisted source may pass materialize_source=False.
             source = source.localCheckpoint(eager=True)
-        doc, base_v = self.manifest_doc_versioned()
+        docs: dict[int, dict] = {}
+        doc, v = self._head(docs)
         live = self._live(spark, doc)
         # keys-only frames keep both joins narrow: the semi/anti sides
         # carry (row_id, keys) / keys, never full rows; AQE broadcasts
@@ -1718,29 +1759,21 @@ class SegmentStore:
             else:
                 tomb = {"file": fname, "n": n_dead}
                 staged.append(fpath)
-        if empty_target:
+        if empty_target or (when_matched == "update" and insert):
             appended = source if insert else None
-        elif when_matched == "update":
-            appended = (
-                source
-                if insert
-                else source.join(
-                    live.select(*keys).distinct(), keys, "left_semi"
-                )
-            )
-        elif insert:
-            appended = source.join(
-                live.select(*keys).distinct(), keys, "left_anti"
-            )
+        elif when_matched == "update" or insert:
+            # update-only keeps the matched source rows, insert-only the
+            # unmatched ones
+            how = "left_semi" if when_matched == "update" else "left_anti"
+            appended = source.join(live.select(*keys).distinct(), keys, how)
         else:
             appended = None
         entry = None
-        if appended is not None and "row_id" in appended.columns:
+        if appended is not None:
             # row_id is the store's reserved stamping column: ids carried
             # in from a source read (another store, a change feed) are
             # meaningless in THIS store's row space — re-stamp
             appended = appended.drop("row_id")
-        if appended is not None:
             (seg_id,) = self._new_seg_ids(doc["segments"])
             seg_path = self._seg_path(seg_id)
             (entry,) = self._write_segments(
@@ -1751,28 +1784,12 @@ class SegmentStore:
                 fsio.remove_tree(seg_path)
                 entry = None
             else:
-                entry["row_id_offset"] = sum(
-                    e["n_rows"] for e in doc["segments"]
-                )
                 staged.append(seg_path)
         if tomb is None and entry is None:
             return {"matched": 0, "appended": 0, "tombstone": None, "segment": None}
-        new_doc = dict(
-            doc,
-            segments=doc["segments"] + ([entry] if entry else []),
-            tombstones=doc["tombstones"] + ([tomb] if tomb else []),
-        )
-        try:
-            self._publish(new_doc, base_version=base_v)
-        except ManifestConflictError:
-            for p in staged:
-                fsio.remove_tree(p)
-            raise ManifestConflictError(
-                f"merge_by_key raced a concurrent commit in {self.path}: "
-                "the snapshot it merged against is stale (the racing writer "
-                "may have added or removed rows with matching keys) — "
-                "re-run merge_by_key against the fresh store"
-            ) from None
+        new_doc = self._append_to(doc, [entry] if entry else [])
+        new_doc["tombstones"] = doc["tombstones"] + ([tomb] if tomb else [])
+        self._commit("merge_by_key", docs, v, new_doc, staged)
         return {
             "matched": tomb["n"] if tomb else 0,
             "appended": entry["n_rows"] if entry else 0,
@@ -1810,16 +1827,17 @@ class SegmentStore:
         renumber epoch bumps, and a race with ANY concurrent commit
         surfaces as ManifestConflictError (re-run against the fresh
         store)."""
-        doc, base_v = self.manifest_doc_versioned()
+        docs: dict[int, dict] = {}
+        doc, v = self._head(docs)
         if not doc["tombstones"]:
             return None
         live = self._live(spark, doc, defaults=defaults)
-        return self._renumber(doc, base_v, live, [], 1, index_conf, "purge")[0]
+        return self._renumber(docs, v, live, [], 1, index_conf, "purge")[0]
 
     def _renumber(
         self,
-        doc: dict,
-        base_v: int,
+        docs: dict[int, dict],
+        v: int,
         live: DataFrame,
         keys: list[str],
         n_segments: int,
@@ -1827,8 +1845,8 @@ class SegmentStore:
         op: str,
     ) -> list[dict]:
         """The renumbering rewrite shared by purge and optimize_zorder:
-        stamp dense new row ids over the LIVE rows of ``doc`` in order of
-        ``keys`` then the old row_id (ties keep their prior order), split
+        stamp dense new row ids over the LIVE rows of ``docs[v]`` in order
+        of ``keys`` then the old row_id (ties keep their prior order), split
         them into up to ``n_segments`` segments of contiguous ids, and
         publish them as the whole store — tombstones materialized away,
         batch_keys carried, sketch and bloom columns that every old
@@ -1848,40 +1866,23 @@ class SegmentStore:
         sizes = [s for s in (min(size, n - k * size) for k in range(m)) if s > 0]
         if len(sizes) > 1:
             stamped = stamped.localCheckpoint(eager=False)
+        doc = docs[v]
         segs = doc["segments"]
 
         def shared(field: str) -> list[str]:
             return sorted(set.intersection(*[set(e.get(field) or ()) for e in segs]))
 
         seg_ids = self._new_seg_ids(segs, len(sizes) or 1)
-        try:
-            entries = self._write_segments(
-                stamped, seg_ids, sizes or [0], index_conf,
-                sketch_cols=shared("sketches"),
-                bloom_cols=_bloomable(stamped, shared("blooms")),
-            )
-            offset = 0
-            for entry in entries:
-                entry["row_id_offset"] = offset
-                offset += entry["n_rows"]
-            self._carry_batch_keys(entries[0], segs)
-            self._publish(
-                {
-                    "segments": entries,
-                    "tombstones": [],
-                    "renumber_epoch": doc["renumber_epoch"] + 1,
-                },
-                base_version=base_v,
-            )
-        except ManifestConflictError:
-            for sid in seg_ids:
-                fsio.remove_tree(self._seg_path(sid))
-            raise ManifestConflictError(
-                f"{op} raced a concurrent commit in {self.path}: the "
-                f"rewritten row space is stale — re-run {op} against the "
-                "fresh store"
-            ) from None
-        self.reconcile()
+        entries = self._write_segments(
+            stamped, seg_ids, sizes or [0], index_conf,
+            sketch_cols=shared("sketches"),
+            bloom_cols=_bloomable(stamped, shared("blooms")),
+        )
+        self._carry_batch_keys(entries[0], segs)
+        new_doc = self._append_to(dict(doc, segments=[], tombstones=[]), entries)
+        new_doc["renumber_epoch"] += 1
+        self._commit(op, docs, v, new_doc, [self._seg_path(sid) for sid in seg_ids])
+        self._sweep(docs)
         return entries
 
     def optimize_zorder(
@@ -1922,7 +1923,8 @@ class SegmentStore:
 
         if not cols:
             raise ValueError("optimize_zorder needs at least one column")
-        doc, base_v = self.manifest_doc_versioned()
+        docs: dict[int, dict] = {}
+        doc, v = self._head(docs)
         if not doc["segments"]:
             return []
         live = self._live(spark, doc, defaults=defaults)
@@ -1963,7 +1965,7 @@ class SegmentStore:
         )
         m = int(n_segments) if n_segments else len(doc["segments"])
         return self._renumber(
-            doc, base_v, live.withColumn("_zkey", F.expr(zkey)), ["_zkey"], m,
+            docs, v, live.withColumn("_zkey", F.expr(zkey)), ["_zkey"], m,
             index_conf, "optimize_zorder",
         )
 
@@ -2227,20 +2229,23 @@ class SegmentStore:
 
         Crash-safe ordering ('data first, manifest last'): the merged
         segment is written under the next non-colliding seg-<id> name in
-        place, the manifest is atomically republished to point at it, and
-        only THEN are the old segment dirs removed — a crash at any point
-        leaves a manifest whose segments all exist (old or new), and
-        cleanup of orphaned dirs is idempotent.
+        place and the manifest is atomically republished to point at it;
+        the old segment dirs stay, referenced by older versions, until
+        vacuum drops those — a crash at any point leaves a manifest whose
+        segments all exist (old or new), and the orphan sweep after the
+        publish is idempotent.
 
         Delegates to :meth:`compact_run` over the whole manifest — so with
         ``index_conf=None`` and all-indexed inputs the stored indexes are
         MERGED (posting-list shift), not dropped; an explicit index_conf
         forces a rebuild. A single-segment (or empty) store is already
         compact: no-op."""
-        entries = self.manifest()
-        if not entries:
-            return self
-        self.compact_run(spark, 0, len(entries), defaults, index_conf)
+        docs: dict[int, dict] = {}
+        doc, v = self._head(docs)
+        if doc["segments"]:
+            self._compact_run(
+                spark, docs, v, 0, len(doc["segments"]), defaults, index_conf
+            )
         return self
 
     def compact_run(
@@ -2259,11 +2264,20 @@ class SegmentStore:
         local ids are the run's global ids rebased to its first offset, and
         all other entries keep their offsets. Crash-safe like compact():
         data first, manifest last, orphan sweep after."""
-        self.reconcile()
-        entries, base_v = self.manifest_versioned()
+        docs: dict[int, dict] = {}
+        v = self._head(docs)[1]
+        return self._compact_run(spark, docs, v, start, end, defaults, index_conf)
+
+    def _compact_run(
+        self, spark, docs: dict[int, dict], v: int, start: int, end: int,
+        defaults: dict[str, object] | None, index_conf: IndexConf | None,
+    ) -> dict:
+        """:meth:`compact_run` of the run [start, end) of ``docs[v]``."""
+        entries = docs[v]["segments"]
         if not (0 <= start < end <= len(entries)):
             raise ValueError(f"run [{start}, {end}) out of range 0..{len(entries)}")
         if end - start == 1:
+            self._sweep(docs)
             return entries[start]
         run = entries[start:end]
         base = run[0]["row_id_offset"]
@@ -2318,44 +2332,27 @@ class SegmentStore:
         self._carry_batch_keys(entry, run)
         entry["row_id_offset"] = base
         run_ids = [e["segment_id"] for e in run]
-        for _ in range(_COMMIT_RETRIES):
-            try:
-                self._publish(
-                    entries[:start] + [entry] + entries[end:],
-                    base_version=base_v,
+
+        def rebuild(doc: dict) -> dict:
+            # compaction commutes with APPENDS (they only extend the list
+            # past the run): relocate the identical run in the manifest and
+            # publish around it. If the run itself changed (a concurrent
+            # compactor merged part of it), the merge we wrote is stale.
+            segs = doc["segments"]
+            ids, n = [e["segment_id"] for e in segs], len(run_ids)
+            pos = ids.index(run_ids[0]) if run_ids[0] in ids else 0
+            if ids[pos : pos + n] != run_ids or segs[pos]["row_id_offset"] != base:
+                raise ManifestConflictError(
+                    f"compact_run [{start}, {end}) raced a concurrent "
+                    f"compaction in {self.path}: the run is no longer "
+                    "intact in the latest manifest — re-plan against "
+                    "the fresh manifest and retry"
                 )
-                self.reconcile()
-                return entry
-            except ManifestConflictError:
-                # a concurrent commit landed first. Compaction commutes
-                # with APPENDS (they only extend the list past the run) —
-                # relocate the identical run in the fresh manifest and
-                # re-publish around it. If the run itself changed (a
-                # concurrent compactor merged part of it), the merge we
-                # wrote is stale: drop it and surface the conflict.
-                fresh, base_v = self.manifest_versioned()
-                ids = [e["segment_id"] for e in fresh]
-                pos = next(
-                    (
-                        i
-                        for i in range(len(fresh) - len(run_ids) + 1)
-                        if ids[i : i + len(run_ids)] == run_ids
-                    ),
-                    None,
-                )
-                if pos is None or fresh[pos]["row_id_offset"] != base:
-                    fsio.remove_tree(self._seg_path(new_id))
-                    raise ManifestConflictError(
-                        f"compact_run [{start}, {end}) raced a concurrent "
-                        f"compaction in {self.path}: the run is no longer "
-                        "intact in the latest manifest — re-plan against "
-                        "the fresh manifest and retry"
-                    ) from None
-                entries, start, end = fresh, pos, pos + len(run_ids)
-        raise ManifestConflictError(
-            f"compact_run lost the manifest race {_COMMIT_RETRIES} times in "
-            f"{self.path}; giving up"
-        )
+            return dict(doc, segments=segs[:pos] + [entry] + segs[pos + n :])
+
+        self._commit("compact_run", docs, v, rebuild, [self._seg_path(new_id)])
+        self._sweep(docs)
+        return entry
 
     def compact_tiered(
         self,
@@ -2387,8 +2384,10 @@ class SegmentStore:
                 t += 1
             return t
 
+        docs: dict[int, dict] = {}
         while True:
-            entries = self.manifest()
+            doc, v = self._head(docs)
+            entries = doc["segments"]
             run = None
             i = 0
             while i < len(entries):
@@ -2401,4 +2400,4 @@ class SegmentStore:
                 i = j
             if run is None:
                 return self
-            self.compact_run(spark, run[0], run[1], defaults, index_conf)
+            self._compact_run(spark, docs, v, run[0], run[1], defaults, index_conf)

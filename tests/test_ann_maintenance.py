@@ -135,6 +135,29 @@ def test_sync_appends_inserts_and_is_idempotent(spark, emb, corpus, tmp_path):
     assert spark.read.parquet(path).count() == n0
 
 
+def test_seed_builds_from_the_version_it_pins(spark, emb, corpus, tmp_path):
+    """A corpus commit landing between the seed's version read and its
+    build input read must reach the store exactly once: the seed builds
+    the pinned version, the next sync appends the commit."""
+    read = corpus.manifest_doc_versioned
+
+    def racy():
+        del corpus.manifest_doc_versioned  # fire once
+        out = read()
+        SegmentStore(corpus.path).write_segment(
+            emb.filter(F.col("vec_id") >= 450), order_keys=["vec_id"]
+        )
+        return out
+
+    corpus.manifest_doc_versioned = racy
+    path = str(tmp_path / "ivf")
+    ann_store_seed(spark, corpus, path, "vec_id", "embedding", dim=DIM)
+    ann_store_sync(spark, corpus, path, "vec_id", "embedding", dim=DIM)
+    ids = [r["neighbor_id"] for r in spark.read.parquet(path).collect()]
+    want = [r["vec_id"] for r in corpus.open(spark).collect()]
+    assert sorted(ids) == sorted(want)
+
+
 def test_reinsert_after_takedown(spark, emb, corpus, tmp_path):
     """A republished document (delete then insert of the same vec_id with
     a NEW vector) must surface with the new content — the deletion-list

@@ -126,6 +126,35 @@ def test_delta_equals_rebuild_under_any_split(spark, corpus, tmp_path):
     assert _rows(spark, lump) == _rows(spark, ctl)
 
 
+def test_seed_builds_from_the_version_it_pins(spark, corpus, tmp_path):
+    """A corpus commit landing between the seed's version read and its
+    build input read must reach the chunk store exactly once: the seed
+    builds the pinned version, the next sync appends the commit."""
+    from iodf_spark.sources.segments import SegmentStore
+
+    read = corpus.manifest_doc_versioned
+
+    def racy():
+        del corpus.manifest_doc_versioned  # fire once
+        out = read()
+        SegmentStore(corpus.path).write_segment(
+            _docs(spark, range(6, 9)), order_keys=["doc_id"]
+        )
+        return out
+
+    corpus.manifest_doc_versioned = racy
+    path = str(tmp_path / "chunks")
+    chunk_store_seed(spark, corpus, path, "doc_id", "text",
+                     cent_vecs=CENTS, **GEO)
+    chunk_store_sync(spark, corpus, path, "doc_id", "text", **GEO)
+    ctl = str(tmp_path / "rebuild")
+    chunk_store_seed(spark, corpus, ctl, "doc_id", "text",
+                     cent_vecs=CENTS, **GEO)
+    got = _probe_all(spark, path)
+    assert len({nid for _r, nid in got}) == len(got)
+    assert got == _probe_all(spark, ctl)
+
+
 def test_replayed_window_skips_via_ledger_no_store_scan(
     spark, corpus, tmp_path, monkeypatch
 ):

@@ -79,14 +79,12 @@ def test_chunkivf_probe_prunes_cell_partitions(spark, arms):
     assert entrymod.CHUNKIVF_PROBE < entrymod.CHUNKIVF_CELLS
 
 
-def test_chunk_store_incremental_append_equals_rebuild(spark):
+def test_chunk_store_incremental_append_equals_rebuild(spark, tmp_path):
     """The standing RAG indexer shape: NEW documents' chunks append to
     the chunk store against the FROZEN sidecar quantizer (ivf_append) —
     byte-identical store rows and probe results to a one-shot rebuild
     over the full corpus. At 100 TB the store is maintained by deltas,
     never rebuilt; frozen centroids make append == rebuild exact."""
-    import tempfile
-
     from iodf_spark.operators.ann_maintenance import read_centroid_sidecar
     from iodf_spark.operators.packing import chunk_documents
     from iodf_spark.operators.similarity import (
@@ -106,8 +104,8 @@ def test_chunk_store_incremental_append_equals_rebuild(spark):
     mid = emb.agg(F.expr("percentile_approx(cid, 0.5)")).collect()[0][0]
     first = emb.filter(F.col("cid") <= mid)
     rest = emb.filter(F.col("cid") > mid)
-    inc = tempfile.mkdtemp(prefix="iodf_chunkinc_")
-    full = tempfile.mkdtemp(prefix="iodf_chunkfull_")
+    inc = str(tmp_path / "inc")
+    full = str(tmp_path / "full")
     ivf_build_store(
         first, "cid", "vec", inc,
         n_centroids=entrymod.CHUNKIVF_CELLS, dim=entrymod.SEMVEC_DIM,
@@ -157,7 +155,7 @@ def test_tuner_on_the_chunk_store(spark, arms):
     assert read_serving_sidecar(path) == doc
 
 
-def test_chunk_store_doc_takedown_removes_every_chunk(spark):
+def test_chunk_store_doc_takedown_removes_every_chunk(spark, tmp_path):
     """The RAG compliance story: taking down a DOCUMENT must remove all
     of its chunks from retrieval. The takedown ids are recomputed
     deterministically from the doc's own text (the same chunk geometry
@@ -165,8 +163,6 @@ def test_chunk_store_doc_takedown_removes_every_chunk(spark):
     through the ordinary deletion-list path, and compaction reclaims the
     codes; the surviving corpus still ranks identically to a fresh build
     without the doc."""
-    import tempfile
-
     from iodf_spark.operators.ann_maintenance import (
         ann_apply_deletes,
         ann_compact_deletes,
@@ -185,7 +181,7 @@ def test_chunk_store_doc_takedown_removes_every_chunk(spark):
         ch.select(entrymod._chunk_cid_expr().alias("cid"), "chunk_text"),
         "cid", "chunk_text", dim=entrymod.SEMVEC_DIM,
     ).cache()
-    path = tempfile.mkdtemp(prefix="iodf_chunkdel_")
+    path = str(tmp_path / "del")
     ivf_build_store(
         emb, "cid", "vec", path,
         n_centroids=entrymod.CHUNKIVF_CELLS, dim=entrymod.SEMVEC_DIM,
@@ -227,7 +223,7 @@ def test_chunk_store_doc_takedown_removes_every_chunk(spark):
     # compaction reclaims; ranking equals a fresh build without the doc
     ann_compact_deletes(spark, path)
     assert read_ann_deletes(spark, path) is None
-    clean = tempfile.mkdtemp(prefix="iodf_chunkclean_")
+    clean = str(tmp_path / "clean")
     ivf_build_store(
         emb.filter(
             F.expr(f"cid div {entrymod.CHUNKVEC_ENC}") != victim

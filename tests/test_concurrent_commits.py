@@ -123,6 +123,67 @@ def test_have_segments_race_converges_to_one_segment(spark, path):
     assert a.open(spark).count() == 40
 
 
+def test_write_segments_by_retries_across_concurrent_append(spark, path):
+    """A batched append losing its race to a plain append re-offsets
+    every one of its segments at the fresh end: all land, and the
+    offsets stay the running concatenation in commit order."""
+    a, b = SegmentStore(path), SegmentStore(path)
+    a.write_segment(_df(spark, 0, 10), order_keys=["k"])
+    _inject_then_conflict(
+        a, lambda: b.write_segment(_df(spark, 100, 130), order_keys=["k"])
+    )
+    src = _df(spark, 10, 30).withColumn("part", F.col("k") % 2)
+    a.write_segments_by(src, "part", [0, 1], ["k"])
+    entries = a.manifest()
+    assert [e["n_rows"] for e in entries] == [10, 30, 10, 10]
+    assert [e["row_id_offset"] for e in entries] == [0, 10, 40, 50]
+    got = a.open(spark).orderBy("row_id").select("k").collect()
+    assert [r["k"] for r in got] == (
+        list(range(10)) + list(range(100, 130))
+        + list(range(10, 30, 2)) + list(range(11, 30, 2))
+    )
+
+
+@pytest.mark.parametrize(
+    "op", ["write_segment", "write_segments_by", "delete_where", "compact_run"]
+)
+def test_always_losing_publish_gives_up_cleanly(spark, path, op):
+    """A publish that loses every race: after _COMMIT_RETRIES attempts
+    the op raises ManifestConflictError naming itself, removes what it
+    staged, and the store reads exactly as before."""
+    from iodf_spark.sources.segments import _COMMIT_RETRIES
+
+    store = SegmentStore(path)
+    store.write_segment(_df(spark, 0, 10), order_keys=["k"])
+    store.write_segment(_df(spark, 10, 20), order_keys=["k"])
+    before = (store.manifest_doc(), store.versions(), sorted(os.listdir(path)))
+    attempts = []
+
+    def losing(doc, base_version=None):
+        attempts.append(base_version)
+        raise ManifestConflictError("injected: always beaten")
+
+    store._publish = losing
+    run = {
+        "write_segment": lambda: store.write_segment(
+            _df(spark, 20, 30), order_keys=["k"]
+        ),
+        "write_segments_by": lambda: store.write_segments_by(
+            _df(spark, 20, 30).withColumn("part", F.col("k") % 2),
+            "part", [0, 1], ["k"],
+        ),
+        "delete_where": lambda: store.delete_where(spark, "k < 5"),
+        "compact_run": lambda: store.compact_run(spark, 0, 2),
+    }[op]
+    with pytest.raises(ManifestConflictError, match=f"{op} lost the manifest race"):
+        run()
+    assert attempts == [2] * _COMMIT_RETRIES
+    del store._publish
+    assert (store.manifest_doc(), store.versions(), sorted(os.listdir(path))) == before
+    got = sorted(r["k"] for r in store.open(spark).collect())
+    assert got == list(range(20))
+
+
 def test_compact_run_retries_across_concurrent_append(spark, path):
     """An append landing between the compactor's manifest read and its
     publish must not be lost OR fail the compaction: the compactor

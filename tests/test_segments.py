@@ -341,7 +341,7 @@ def test_manifest_publish_conflict_detected(spark, store):
     with open(next_v, "w") as fh:
         fh.write("[]")
     with _pt.raises(ManifestConflictError, match=f"version {stale[-1] + 1}"):
-        store._publish(before)
+        store._publish(store.manifest_doc(), base_version=stale[-1])
     # the loser's publish touched neither the claimed version nor the pointer
     assert open(next_v).read() == "[]"
     assert store.manifest() == before
